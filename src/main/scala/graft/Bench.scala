@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -29,7 +30,7 @@ object Bench {
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // functions come from the injected extensions (same registry table)
+    // the extensions inject every native function (GraftFunctions.all)
     // untimed warmup: JVM/codegen/scheduler spin-up should not be
     // attributed to whichever query happens to run first. Every query
     // shape runs once at the smallest available SF (same schemas →
@@ -65,19 +66,19 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       }
       try { once(); (1 to 5).map(_ => once()).min }
-      catch { case _: Throwable => -1.0 }
+      catch { case NonFatal(_) => -1.0 }
     }
     try {
       spark.range(1000000L).selectExpr("sum(id)").collect()
       var warmFailures = 0
       selected.foreach { case (_, fn) =>
         try { fn(spark, warmDir).count() }
-        catch { case _: Throwable => warmFailures += 1 }
+        catch { case NonFatal(_) => warmFailures += 1 }
         spark.catalog.clearCache()
       }
       if (warmFailures > 0)
         System.err.println(s"[bench] warmup: $warmFailures/${selected.size} queries failed against $warmDir")
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // min of N interleaved passes per query: a single sample can't be
     // separated from sandbox GC/scheduling spikes (the round-2 driver
     // recorded 6× one-off regressions on queries whose plans hadn't
@@ -99,21 +100,34 @@ object Bench {
     def execute(df: org.apache.spark.sql.DataFrame): Unit =
       if (fullEval) df.queryExecution.toRdd.count() else df.count()
     val samples = scala.collection.mutable.Map.empty[String, Double]
+    // a query that throws is never timed (a failure must not read as
+    // a fast query): it is listed under "failed", kept out of
+    // queries / queries_norm / total, and not re-run in later passes
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     for (_ <- 1 to passes) {
       selected.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { execute(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // queries persist intermediates (LSH signatures etc.); drop them
-        // so later timings don't pay earlier queries' memory pressure
-        spark.catalog.clearCache()
-        samples.updateWith(name) {
-          case Some(prev) => Some(math.min(prev, dt))
-          case None       => Some(dt)
+        if (!failed(name)) {
+          val t0 = System.nanoTime()
+          try {
+            execute(fn(spark, sfDir))
+            val dt = (System.nanoTime() - t0) / 1e9
+            samples.updateWith(name) {
+              case Some(prev) => Some(math.min(prev, dt))
+              case None       => Some(dt)
+            }
+          } catch { case NonFatal(e) =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            failed += name
+          }
+          // queries persist intermediates (LSH signatures etc.); drop
+          // them so later timings don't pay earlier queries' memory
+          // pressure
+          spark.catalog.clearCache()
         }
       }
     }
-    val results = selected.keys.map(n => n -> samples(n)).toMap
+    val results = samples.toMap -- failed
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // calibration-NORMALIZED per-query values (value / calibration):
@@ -128,12 +142,12 @@ object Bench {
           .mkString("{", ",", "}")
       else "{}"
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","calibration_s":$calibration,"passes":$passes,"queries":$qs,"queries_norm":$qsNorm,"sf":"$sfDir"}"""
+    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","calibration_s":$calibration,"passes":$passes,"queries":$qs,"queries_norm":$qsNorm,"failed":$failedJson,"sf":"$sfDir"}"""
     println(fullJson)
     // the per-query dict above can exceed the driver's tail capture —
     // repeat the headline number LAST in a short line so the round's
     // total always survives truncation
-    println(s"""{"metric":"total_only","value":$total,"unit":"sec","calibration_s":$calibration,"passes":$passes,"n_queries":${results.size},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total_only","value":$total,"unit":"sec","calibration_s":$calibration,"passes":$passes,"n_queries":${results.size},"failed":$failedJson,"sf":"$sfDir"}""")
     // persist the COMPLETE timing map to a file: the driver's stdout
     // tail truncates past ~50 per-query lines, and cross-round
     // common-line audits need every declared query's number, not a
@@ -143,7 +157,7 @@ object Bench {
       "bench_full.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (fullJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $outFile: $e") }
     spark.stop()
   }

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -27,8 +28,8 @@ object Verify {
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // no imperative register(): the extensions already injected every
-    // function from the same GraftFunctions.all table
+    // the extensions inject every function of the GraftFunctions.all
+    // table, so library call sites find them registered
     new java.io.File(outDir).mkdirs()
     // dev-loop filter: SPARK_GRAFT_ONLY=q_a,q_b runs (and dumps oracles
     // for) just those queries. The driver never sets it — its full-run
@@ -39,11 +40,15 @@ object Verify {
       case Some(names) => SparkEntry.queries.view.filterKeys(names).toMap
       case None        => SparkEntry.queries
     }
+    // NonFatal only: an OOM or other fatal error ends the run instead
+    // of carrying on in a broken JVM
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
       finally spark.catalog.clearCache()
     }
@@ -67,6 +72,8 @@ object Verify {
     val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    if (failed.nonEmpty)
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(",")}")
     spark.stop()
   }
 }

@@ -283,7 +283,7 @@ object Curation {
       // makes the aggregation below partition-local — the shuffle
       // moves one doc-sized row per document instead of one row per
       // bigram occurrence with the stat columns duplicated onto each
-      // (measured 1.56 → 1.02 s at sf0.1, tools.ProfileTokens).
+      // (measured 1.56 → 1.02 s at sf0.1).
       // Width pinned for the CPU-dense downstream (the
       // assignFromStaged rationale)
       .repartition(documents.sparkSession.sessionState.conf

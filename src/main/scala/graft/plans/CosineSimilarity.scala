@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession, functions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -209,8 +209,8 @@ object GraftFunctions {
     }
 
   /** Single source of truth for every native function: consumed by
-    * register() (imperative) AND GraftExtensions (injection) so the
-    * two paths can never drift.
+    * ensure() (imperative) AND GraftExtensions (injection) so the two
+    * paths can never drift.
     */
   val all: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     (CosineName,
@@ -298,17 +298,24 @@ object GraftFunctions {
       arity(TextHashFunctions.BpeEncodeName, 2)(e =>
         BpeEncodeWords(e(0), e(1)))))
 
-  /** Register graft's native expressions in a session (idempotent).
-    * Callers (Verify/Bench/tests) invoke this once; library code
-    * picks the native path up automatically when present.
+  /** Register the graft natives the session is missing (idempotent)
+    * — the imperative alternative to GraftExtensions. A GraftExtensions
+    * session already has every one, so this leaves its injected
+    * entries as they are.
     */
-  def register(spark: SparkSession): Unit =
+  def ensure(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "scala_udf")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
+  }
 
-  def isRegistered(spark: SparkSession): Boolean =
-    spark.sessionState.functionRegistry
-      .functionExists(FunctionIdentifier(CosineName))
+  /** A call of the graft native `name`, resolvable in `spark`: the
+    * one way library code reaches a native expression.
+    */
+  def call(spark: SparkSession, name: String, args: Column*): Column = {
+    ensure(spark)
+    functions.call_function(name, args: _*)
+  }
 }

@@ -13,7 +13,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * for every new session, including thriftserver/connect sessions
   * where library code never executes — and installs the
   * RewriteJaccard optimizer rule. The function list is
-  * GraftFunctions.all, shared with the imperative register() path.
+  * GraftFunctions.all, shared with GraftFunctions.ensure, which
+  * leaves these injected entries as they are.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -10,8 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
 /** Native int8 quantization kernels — the fused forms of
-  * [[graft.similarity.Similarity]]'s composed quantScale /
-  * quantizeVec / qdot / readout-stats expressions.
+  * composed quantScale / quantizeVec expressions of
+  * [[graft.similarity.Similarity]] and of the qdot / readout-stats
+  * folds the specs keep as parity references.
   *
   * Why native: the composed forms are built from higher-order array
   * functions (transform / aggregate / zip_with / filter), which Spark
@@ -226,7 +227,7 @@ case class QuantizeVec(child: Expression) extends QuantVecInput {
 }
 
 /** Micro-nat token-entropy sum — the native form of the composed
-  * [[graft.textanalysis.TextAnalysis.entropyNats]] fold: sort the
+  * entropyNats fold (TextAnalysisComposed in the specs): sort the
   * token array (Spark array_sort ordering — binary string compare,
   * nulls last), then per run of equal tokens accumulate
   * `run · round(ln(n/run)·10⁶)` as an exact long. The composed form

@@ -87,10 +87,10 @@ object NbClassifier {
     require(buckets > 0 && buckets <= Dsir.MaxBuckets,
       s"buckets must be in (0, ${Dsir.MaxBuckets}]: $buckets")
     val pos = coalesce(labelPred, lit(false))
-    // gram walk through the native fused bucket generator when
-    // registered (one md5 per gram off the token bytes — the
-    // Dsir.bucketsFor dispatch); counts are identical by the
-    // DsirBuckets parity pin, so the trained weights don't move
+    // gram walk through the native fused bucket generator (one md5
+    // per gram off the token bytes — Dsir.bucketsFor); counts are
+    // identical by the DsirBuckets parity pin, so the trained weights
+    // don't move
     val rows = pool
       .select(pos.as("__p"),
         explode(Dsir.bucketsFor(pool)(words(col(textCol)), buckets))
@@ -151,18 +151,16 @@ object NbClassifier {
   }
 
   /** Row-local decision score in integer micro-nats over a pre-split
-    * token array — the serving form ([[scoreCol]] wraps it with the
-    * native fused expression when registered). Bit-equal to the
-    * relational replay by the shared-expression construction.
+    * token array — the serving form ([[decision6For]] computes it
+    * with the native fused expression). Bit-equal to the relational
+    * replay by the shared-expression construction.
     */
   def decision6Local(model: NbModel)(ws: Column): Column =
     Dsir.score6Local(Dsir.DsirModel(model.weights6))(ws) +
       lit(model.bias6)
 
-  /** The decision score column for `df` — native fused scorer when
-    * the session registers graft's functions, composed fold
-    * otherwise (the [[Dsir.score6For]] dispatch, shared weights
-    * array shape).
+  /** The decision score column for `df` through the native fused
+    * scorer ([[Dsir.score6For]], shared weights array shape).
     */
   def decision6For(df: DataFrame, model: NbModel)(ws: Column): Column =
     Dsir.score6For(df, Dsir.DsirModel(model.weights6))(ws) +

@@ -24,7 +24,7 @@ object SparkSpec {
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.register(s)
+    graft.plans.GraftFunctions.ensure(s)
     s
   }
 }

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The extensions path: a session built with
@@ -83,6 +84,48 @@ class GraftExtensionsSpec extends AnyFunSuite
     assert(df.count() > 0)
   }
 
+  private def infos(s: SparkSession) = GraftFunctions.all.map { case (n, _, _) =>
+    s.sessionState.functionRegistry.lookupFunction(FunctionIdentifier(n)).get
+  }
+
+  test("library operators leave the injected functions as they were " +
+      "(ensure replaces nothing)") {
+    val before = infos(spark)
+    assert(before.forall(_.getClassName == classOf[GraftExtensions].getName))
+    val docs = spark.createDataFrame(Seq((1L, "a b c a b c")))
+      .toDF("doc_id", "text")
+    assert(graft.textanalysis.TextAnalysis.compressionRatio(docs).count() > 0)
+    val after = infos(spark)
+    assert(after.forall(_.getClassName == classOf[GraftExtensions].getName))
+    before.zip(after).foreach { case (b, a) => assert(a eq b, a.getName) }
+  }
+
+  test("ensure twice in a bare session is a no-op") {
+    // a session with no extensions and no registration, on the
+    // context this suite's session created: the default/active
+    // sessions are swapped out and restored around the build
+    assert(!spark.sparkContext.isStopped)
+    val (default, active) =
+      (SparkSession.getDefaultSession, SparkSession.getActiveSession)
+    SparkSession.clearDefaultSession()
+    SparkSession.clearActiveSession()
+    val bare = try SparkSession.builder().getOrCreate().newSession()
+      finally {
+        default.fold(SparkSession.clearDefaultSession())(
+          SparkSession.setDefaultSession)
+        active.fold(SparkSession.clearActiveSession())(
+          SparkSession.setActiveSession)
+      }
+    val registry = bare.sessionState.functionRegistry
+    assert(GraftFunctions.all.forall { case (n, _, _) =>
+      !registry.functionExists(FunctionIdentifier(n)) })
+    GraftFunctions.ensure(bare)
+    val first = infos(bare)
+    // a re-registration would install a fresh ExpressionInfo
+    GraftFunctions.ensure(bare)
+    infos(bare).zip(first).foreach { case (a, b) => assert(a eq b, a.getName) }
+  }
+
   test("optimizer rule rewrites composed jaccard to the native expression") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -114,7 +157,7 @@ class GraftExtensionsSpec extends AnyFunSuite
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
     val df = emb.crossJoin(broadcast(q)).select(
-      graft.similarity.Similarity.cosine(col("embedding"), col("q_emb")).as("c"))
+      graft.similarity.SimilarityComposed.cosine(col("embedding"), col("q_emb")).as("c"))
     val opt = df.queryExecution.optimizedPlan.toString
     assert(opt.contains("cosinesimilarity"), opt)
     // rewritten values are bit-equal to the independently re-derived
@@ -123,7 +166,7 @@ class GraftExtensionsSpec extends AnyFunSuite
       aggregate(zip_with(a.cast("array<double>"), b.cast("array<double>"),
         (x, y) => x * y), lit(0.0), (acc, x) => acc + x) + lit(0.0)
     val both = emb.crossJoin(broadcast(q)).select(
-      graft.similarity.Similarity.cosine(col("embedding"), col("q_emb")).as("rw"),
+      graft.similarity.SimilarityComposed.cosine(col("embedding"), col("q_emb")).as("rw"),
       (dotPlus(col("embedding"), col("q_emb")) /
         (sqrt(dotPlus(col("embedding"), col("embedding"))) *
          sqrt(dotPlus(col("q_emb"), col("q_emb"))))).as("manual"))
@@ -158,7 +201,7 @@ class GraftExtensionsSpec extends AnyFunSuite
     val withNull = base.select(
       expr("array(1.0d, cast(null as double))").as("a"),
       expr("array(1.0d, 2.0d)").as("b"))
-    def cos = graft.similarity.Similarity.cosine(col("a"), col("b"))
+    def cos = graft.similarity.SimilarityComposed.cosine(col("a"), col("b"))
     assert(mismatch.select(cos.as("c")).head.isNullAt(0))
     assert(withNull.select(cos.as("c")).head.isNullAt(0))
   }

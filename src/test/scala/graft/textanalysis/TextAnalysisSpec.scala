@@ -3,6 +3,7 @@ package graft.textanalysis
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
 import graft.dedup.Dedup
+import graft.plans.RollingHashUtil.FpMod
 
 class TextAnalysisSpec extends SparkSpec {
   import spark.implicits._
@@ -119,12 +120,12 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("rolling hash: deterministic, order-sensitive, bounded") {
     val df = Seq((1L, "abc"), (2L, "acb"), (3L, "abc")).toDF("doc_id", "text")
-    val h = df.select(TextAnalysis.rollingHash($"text")).collect().map(_.getLong(0))
+    val h = df.select(TextAnalysisComposed.rollingHash($"text")).collect().map(_.getLong(0))
     assert(h(0) === h(2))
     assert(h(0) !== h(1)) // order matters — not a bag hash
-    assert(h.forall(v => v >= 0 && v < TextAnalysis.FpMod))
+    assert(h.forall(v => v >= 0 && v < FpMod))
     // matches the direct fold
-    val expected = "abc".foldLeft(0L)((acc, c) => (acc * 31 + c.toLong) % TextAnalysis.FpMod)
+    val expected = "abc".foldLeft(0L)((acc, c) => (acc * 31 + c.toLong) % FpMod)
     assert(h(0) === expected)
   }
 
