@@ -19,8 +19,8 @@ object Bench {
       // is untouched — CPU-dense narrow stages still fan out by input
       // splits. On a cluster the same settings coalesce to the
       // advisory size, which is the behavior you want there too.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", sys.env.getOrElse("SPARK_GRAFT_PARFIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "16m"))
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
       // test tables are one small parquet file each; default 128 MB
       // splits would scan them single-threaded. On a cluster the
       // input is many files and this knob is irrelevant.

@@ -13,10 +13,13 @@ import graft.quality.RuleBasedScorer
 import graft.similarity.Similarity
 import graft.textanalysis.TextAnalysis
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+import EntryInfra._
+
+/** The query contract — see SURVEY.md §7.
   *
   * Every key in `queries` is one operator from SURVEY.md §2 (or a
-  * training-data-pipeline extra); `oracleSql` holds the DuckDB
+  * training-data-pipeline extra), declared once with its oracle
+  * decision in its family's `Seq[Query]`; `oracleSql` holds the DuckDB
   * equivalent for the hash-match correctness gate. Column names and
   * ordering are aligned on both sides; doubles flow through exact
   * decimal sums (or explicit rounding) so float summation order can
@@ -49,142 +52,33 @@ object SparkEntry extends EntryInfra
     else RelationalOps.pricingSummary(Tables.lineitem(spark, sf))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** Every declared query, family by family — the one list that
+    * `queries` and `oracleSql` derive from.
+    */
+  private[graft] lazy val declared: Seq[Query] =
     relationalQueries ++ searchQueries ++ dedupQueries ++ graphQueries ++ annQueries ++ pqQueries ++ textQueries ++ curationQueries ++ mediaQueries
 
-  def oracleSql: Map[String, String] = {
-    // the snapshot eval's oracle IS the full metric replay restricted
-    // to the base batch's document split — derived from the one-shot
-    // SQL so the metric math can never drift between the two gates
-    val retrievalEvalAsOfSql = {
-      val corpusCte =
-        "d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),"
-      val full = staticOracleSql("q_retrieval_eval")
-      require(full.contains(corpusCte),
-        "q_retrieval_eval oracle drifted — update the as-of derivation")
-      full.replace(corpusCte,
-        "d AS (SELECT doc_id, string_split(text, ' ') AS ws " +
-          "FROM documents WHERE doc_id % 8 <> 5),")
-    }
-    staticOracleSql ++
-      // the indexed serving path must agree with the one-shot ranking,
-      // so its oracle IS the q_search_bm25 replay
-      Map("q_search_bm25_indexed" -> staticOracleSql("q_search_bm25"),
-        // the TERM-bucketed postings layout must rank identically to
-        // the path layout — same one-shot replay gates both (round 16)
-        "q_search_bm25_bucketed" -> staticOracleSql("q_search_bm25"),
-        // written-model DSIR must score identically to the in-session
-        // path, so its oracle IS the q_dsir_weights replay
-        "q_dsir_weights_indexed" -> staticOracleSql("q_dsir_weights"),
-        // merged counts ≡ full retrain by additivity, so the merged
-        // model's scores are gated by the SAME full-corpus replay
-        "q_dsir_incremental" -> staticOracleSql("q_dsir_weights"),
-        // the written classifier must serve identically to the
-        // in-session one (the q_dsir_weights_indexed precedent)
-        "q_quality_classifier_indexed" ->
-          staticOracleSql("q_quality_classifier_gate"),
-        // the staged memorization twins (g-bucketed doc-grams +
-        // bucketed frozen index) must score identically to their
-        // one-shot forms — each shares that oracle verbatim, so
-        // staged ≡ one-shot is gated by the hash itself
-        "q_memorization_indexed" -> staticOracleSql("q_memorization"),
-        "q_memorization_probe_indexed" ->
-          staticOracleSql("q_memorization_probe"),
-        "q_memorization_incremental_indexed" ->
-          staticOracleSql("q_memorization_incremental"),
-        // compaction must not change a single served value — the
-        // compacted index shares the tombstoned index's oracle
-        // verbatim, so compacted ≡ tombstoned is gated by the hash
-        "q_search_bm25_compacted" ->
-          staticOracleSql("q_search_bm25_deleted"),
-        // retention leaves lexical serving invariant too — the
-        // retained index shares the erasure replay; the fold and the
-        // ledger split are gated by their own static SQL below
-        "q_search_bm25_retention" ->
-          staticOracleSql("q_search_bm25_deleted"),
-        "q_memorization_probe_compacted" ->
-          staticOracleSql("q_memorization_probe_deleted"),
-        // retention leaves the merged membership identical to the
-        // batch-deleted index (w1+w2 appends fold/keep to the full
-        // train set, the same ≡1 mod 8 batch erased) — serving
-        // invariance under the fold is gated by sharing that oracle
-        "q_memorization_probe_retained" ->
-          staticOracleSql("q_memorization_probe_deleted"),
-        // written-append ≡ retrain-on-union: the appended index's
-        // probe shares the FULL-train oracle verbatim
-        "q_memorization_probe_appended" ->
-          staticOracleSql("q_memorization_probe"),
-        // stream-built ≡ retrain-on-union, same additivity argument
-        // through the checkpointed sink
-        "q_memorization_probe_streamed" ->
-          staticOracleSql("q_memorization_probe"),
-        // sink-erased ≡ retrain-on-remaining: the streaming delete
-        // sink's negated counts share the batch-deleted replay
-        "q_memorization_probe_stream_deleted" ->
-          staticOracleSql("q_memorization_probe_deleted"),
-        // container-agnostic serving: the mixed-codec corpus must be
-        // behaviorally identical to the all-ADPCM one — sharing the
-        // block-rule oracle makes that THE gate
-        "q_audio_mixed_codec" ->
-          staticOracleSql("q_audio_real_adpcm"),
-        "q_knn_quantized_ivf_compacted" ->
-          staticOracleSql("q_knn_quantized_ivf_deleted"),
-        // the float family's compacted member shares its deleted
-        // replay the same way
-        "q_ann_ivf_compacted" -> staticOracleSql("q_ann_ivf_deleted"),
-        // retention (bounded-history compaction) leaves SERVING
-        // invariant — same erasure replay; the fold itself is gated
-        // by the separate static as-of SQL
-        "q_ann_ivf_retention" -> staticOracleSql("q_ann_ivf_deleted"),
-        // streaming erasure ≡ batch erasure ≡ rebuild-on-remaining:
-        // the delete SINKS share the deleted oracles verbatim
-        "q_search_bm25_stream_deleted" ->
-          staticOracleSql("q_search_bm25_deleted"),
-        "q_ann_ivf_stream_deleted" -> staticOracleSql("q_ann_ivf_deleted"),
-        // the stream-built compressed index shares the full-corpus
-        // int8 replay: stream-built ≡ rebuild is the sink's claim
-        "q_knn_quantized_ivf_streamed" ->
-          staticOracleSql("q_knn_quantized_ivf"),
-        // the co-bucketed J2 twin must produce the one-shot join's
-        // rows exactly — same oracle, different (zero-exchange) plan
-        "q_enrich_content_staged" -> staticOracleSql("q_enrich_content"),
-        // the staged substring-dedup twin (round-11 verdict #2)
-        // shares its one-shot replay verbatim
-        "q_substring_dedup_indexed" ->
-          staticOracleSql("q_substring_dedup"),
-        // catalog retention on the gate sink's output leaves the
-        // admitted set invariant — shares the admission replay
-        "q_admission_retained" ->
-          staticOracleSql("q_admission_pipeline"),
-        "q_retrieval_eval_asof" -> retrievalEvalAsOfSql) ++
-      ivfKmeansOracle ++ ivfReclusterOracle ++ ivfReclusterRecallOracle ++
-      pqOracle ++ pqRecallOracle ++ pqWideRecallOracle ++
-      residualPqOracles ++ rotatedTruncationOracle ++
-      truncationDriftOracle ++
-      pqReclusterRecallOracle ++ hybridEvalOracle ++
-      bpeVocabOracle ++ bpeCoverageOracle ++
-      bpeFallbackOracle ++ kcoreOracle ++ curationKcoreOracle ++ {
-        // the query-table batched twins (round-15 verdict #1) serve
-        // the SAME 5-query batch under the SAME batched ≡ singles
-        // contract, so each shares its literal twin's generated
-        // replay verbatim — one oracle, two plan shapes under gate
-        val gen = (pqRecallOracle ++ residualPqOracles).toMap
-        Seq("q_knn_pq_multi" -> "q_knn_pq_multi_qt",
-          "q_knn_pq_refined_multi" -> "q_knn_pq_refined_multi_qt",
-          // bucketed ≡ streamed ≡ Q singles: the bucket-pruned
-          // re-rank fetch (round-16 verdict #1) shares the same
-          // refined replay — one oracle, three plan shapes under gate
-          "q_knn_pq_refined_multi" -> "q_knn_pq_refined_multi_qt_bucketed",
-          // the cold-tier serve sink's accumulated catalog: stream ≡
-          // the same one-shot refined replay (round-16, serve-catalog
-          // symmetry with q_knn_served_catalog)
-          "q_knn_pq_refined_multi" -> "q_knn_pq_served_catalog",
-          "q_knn_pq_residual_multi" -> "q_knn_pq_residual_multi_qt")
-          .flatMap { case (from, to) => gen.get(from).map(to -> _) }
-          .toMap
-      }
-  }
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.map(q => q.name -> q.run).toMap
 
-  private def staticOracleSql: Map[String, String] =
-    relationalStaticOracles ++ searchStaticOracles ++ dedupStaticOracles ++ graphStaticOracles ++ annStaticOracles ++ pqStaticOracles ++ textStaticOracles ++ curationStaticOracles ++ mediaStaticOracles
+  /** DuckDB SQL per oracled query: a `SameAs` twin gets its target's
+    * SQL, a `Generated` oracle appears once its query has run in this
+    * JVM, and `NoOracle` queries are absent. `SameAs` resolves one
+    * level only, so a chain or cycle yields no SQL instead of looping.
+    */
+  def oracleSql: Map[String, String] = {
+    val byName = declared.map(q => q.name -> q.oracle).toMap
+    def own(o: Oracle): Option[String] = o match {
+      case Sql(text)      => Some(text)
+      case Generated(gen) => gen()
+      case _              => None
+    }
+    declared.flatMap { q =>
+      val sql = q.oracle match {
+        case SameAs(target) => byName.get(target).flatMap(own)
+        case o              => own(o)
+      }
+      sql.map(q.name -> _)
+    }.toMap
+  }
 }

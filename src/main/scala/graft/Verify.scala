@@ -72,6 +72,17 @@ object Verify {
     val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // a query that ran but has no oracle SQL and is not declared
+    // NoOracle lost its oracle (a Generated oracle still None after
+    // its run): scripts/check_oracle.py would silently check rows only
+    val noOracle = SparkEntry.declared.collect {
+      case EntryInfra.Query(name, _, EntryInfra.NoOracle(_)) => name
+    }.toSet
+    selected.keys.filterNot(n => failed(n) || oracles.contains(n) || noOracle(n))
+      .toSeq.sorted.foreach { name =>
+        System.err.println(s"[verify] $name: no oracle")
+        failed += name
+      }
     if (failed.nonEmpty)
       System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(",")}")
     spark.stop()

@@ -3,13 +3,45 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+/** The declaration every query is made of: [[EntryInfra.Query]]
+  * pairs a name and its Spark computation with exactly one
+  * [[EntryInfra.Oracle]] decision.
+  */
+private[graft] object EntryInfra {
+
+  /** One declared query: `run` computes it on (session, corpus dir);
+    * `oracle` says how the DuckDB hash gate checks its rows.
+    */
+  final case class Query(name: String,
+      run: (SparkSession, String) => DataFrame, oracle: Oracle)
+
+  sealed trait Oracle
+
+  /** Static DuckDB SQL replaying the query. */
+  final case class Sql(text: String) extends Oracle
+
+  /** The named query's oracle gates this one too: a twin that must
+    * return the same rows through another plan, layout or lifecycle.
+    */
+  final case class SameAs(query: String) extends Oracle
+
+  /** SQL printed from artifacts this JVM built (codebooks, centroids,
+    * recorded rounds) — None until the query has run.
+    */
+  final case class Generated(sql: () => Option[String]) extends Oracle
+
+  /** Not hash-gated: `reason` says why no exact DuckDB replay exists. */
+  final case class NoOracle(reason: String) extends Oracle
+}
+
 /** Cross-cutting infrastructure shared by every per-family entry
   * module (the round-14 split of the former monolithic SparkEntry):
   * the injected merge clock, the AQE-off window machinery, the
   * build-once artifact caches, and the tiny driver-side collects
-  * every family reuses. Family modules extend this trait; the
-  * [[SparkEntry]] object mixes them all and aggregates their
-  * `queries`/`oracleSql` chunks.
+  * every family reuses. Family modules extend this trait and each
+  * declares its queries as one `Seq[Query]`; the [[SparkEntry]]
+  * object mixes them all and derives `queries` and `oracleSql` from
+  * the concatenated list.
   */
 private[graft] trait EntryInfra {
 
@@ -168,6 +200,18 @@ private[graft] trait EntryInfra {
     Tables.embeddings(s, d)
       .filter(col("vec_id").isin(0L, 1L, 2L, 3L, 4L))
       .select(col("vec_id").as("query_id"), col("embedding"))
+
+  /** `base` with `anchor` replaced — the oracle of a query that
+    * composes one more predicate onto another query's replay. The
+    * `require` fails loudly when the base SQL no longer contains the
+    * anchor, instead of silently gating against unmodified text.
+    */
+  protected def derivedSql(base: String, anchor: String,
+      replacement: String): String = {
+    require(base.contains(anchor),
+      s"base oracle drifted — anchor not found: $anchor")
+    base.replace(anchor, replacement)
+  }
 
   /** One build-once scratch index per (prefix, corpus path): the
     * keying scheme — md5 of the FULL path + the pid — lives here only,

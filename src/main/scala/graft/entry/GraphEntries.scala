@@ -13,19 +13,21 @@ import graft.quality.RuleBasedScorer
 import graft.similarity.Similarity
 import graft.textanalysis.TextAnalysis
 
+import EntryInfra._
+
 /** Graph queries (components, triangles, k-core, communities, PageRank) — one module of the per-family SparkEntry split (round 14):
-  * this family's `queries` entries and their static oracle SQL, plus
-  * (after the helper migration) the builders and generated oracles
-  * only this family uses. Aggregated by [[SparkEntry]].
+  * this family's `Seq[Query]`, each query declared once beside its
+  * oracle decision, plus the builders and generated oracles only
+  * this family uses. Aggregated by [[SparkEntry]].
   */
 private[graft] trait GraphEntries extends EntryInfra {
 
-  protected def graphQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected def graphQueries: Seq[Query] = Seq(
     // Connected components (the dedup clustering primitive) over a
     // deterministic star-of-stars graph: key→4-hub→16-hub, so every
     // node's component has the closed form key − key%16 — fully
     // oracled including the multi-hop propagation
-    "q_components" -> ((s, d) => {
+    Query("q_components", (s, d) => {
       val k = Tables.orders(s, d).select(col("o_orderkey").as("k"))
       val edges = k
         .select(col("k").as("id_a"), (col("k") - col("k") % 4).as("id_b"))
@@ -36,13 +38,21 @@ private[graft] trait GraphEntries extends EntryInfra {
       // the union-find fast path is pinned equal in DedupSpec
       Dedup.connectedComponents(edges, "id_a", "id_b", smallGraphEdges = 0L)
         .orderBy(col("node"))
-    }),
+    },
+      Sql("""WITH e0 AS (
+           SELECT o_orderkey AS a, o_orderkey - o_orderkey % 4 AS b FROM orders
+           UNION
+           SELECT o_orderkey - o_orderkey % 4 AS a,
+                  o_orderkey - o_orderkey % 16 AS b FROM orders),
+         e AS (SELECT a, b FROM e0 WHERE a <> b),
+         n AS (SELECT a AS node FROM e UNION SELECT b AS node FROM e)
+         SELECT node, node - node % 16 AS component FROM n ORDER BY node""")),
     // The bounded-graph serving path: the SAME edges through the
     // in-task union-find fast path (default smallGraphEdges budget —
     // one job, no propagation rounds), gated by the SAME closed-form
     // oracle SQL, so fast ≡ distributed is the hash gate itself (the
     // q_communities_fast / q_triangles_fast convention)
-    "q_components_fast" -> ((s, d) => {
+    Query("q_components_fast", (s, d) => {
       val k = Tables.orders(s, d).select(col("o_orderkey").as("k"))
       val edges = k
         .select(col("k").as("id_a"), (col("k") - col("k") % 4).as("id_b"))
@@ -50,12 +60,15 @@ private[graft] trait GraphEntries extends EntryInfra {
           (col("k") - col("k") % 16).as("id_b")))
       Dedup.connectedComponents(edges, "id_a", "id_b")
         .orderBy(col("node"))
-    }),
+    },
+      // the in-task union-find fast path shares the closed-form replay
+      // verbatim — fast ≡ distributed is the hash gate itself
+      SameAs("q_components")),
     // Same components contract through the ALTERNATING STAR-
     // CONTRACTION path — O(log n) rounds independent of diameter,
     // the variant a chain-shaped 100 TB graph needs — hash-matched
     // against the identical closed-form oracle
-    "q_components_star" -> ((s, d) => {
+    Query("q_components_star", (s, d) => {
       val k = Tables.orders(s, d).select(col("o_orderkey").as("k"))
       val edges = k
         .select(col("k").as("id_a"), (col("k") - col("k") % 4).as("id_b"))
@@ -69,7 +82,8 @@ private[graft] trait GraphEntries extends EntryInfra {
       Dedup.connectedComponents(edges, "id_a", "id_b",
         smallGraphEdges = 0L, algorithm = "star")
         .orderBy(col("node"))
-    }),
+    },
+      SameAs("q_components")),
     // Graph: PageRank over the same orders-derived link graph — the
     // link-centrality quality prior of crawl curation; 8 exact power-
     // iteration rounds with uniform teleport, and the 16-aligned hubs
@@ -79,7 +93,7 @@ private[graft] trait GraphEntries extends EntryInfra {
     // Graph: degree-distribution readout — the sanity histogram every
     // graph pipeline prints before running anything iterative on it
     // (out-degree d → node count; dangling nodes are the d = 0 row)
-    "q_graph_degrees" -> ((s, d) => {
+    Query("q_graph_degrees", (s, d) => {
       val k = Tables.orders(s, d).select(col("o_orderkey").as("k"))
       val edges = k
         .select(col("k").as("a"), (col("k") - col("k") % 4).as("b"))
@@ -95,33 +109,112 @@ private[graft] trait GraphEntries extends EntryInfra {
         .groupBy(col("out_degree"))
         .agg(count(lit(1)).as("n_nodes"))
         .orderBy(col("out_degree"))
-    }),
+    },
+      Sql("""WITH e0 AS (
+           SELECT o_orderkey AS a, o_orderkey - o_orderkey % 4 AS b FROM orders
+           UNION
+           SELECT o_orderkey - o_orderkey % 4 AS a,
+                  o_orderkey - o_orderkey % 16 AS b FROM orders),
+         e AS (SELECT a, b FROM e0 WHERE a <> b),
+         n AS (SELECT a AS node FROM e UNION SELECT b AS node FROM e),
+         deg AS (SELECT a AS node, count(*) AS d FROM e GROUP BY a)
+         SELECT coalesce(deg.d, 0) AS out_degree,
+                count(*) AS n_nodes
+         FROM n LEFT JOIN deg ON n.node = deg.node
+         GROUP BY 1 ORDER BY out_degree""")),
     // Triangle count + clustering coefficient per node over a built
     // link graph (4-group triangles + 16-group star heads — the star
     // exercises the degree-ordered orientation's heavy-hitter bound)
     // smallGraphEdges=0 pins the distributed 2-path join — the
     // 100 TB shape the oracle replays
-    "q_triangles" -> ((s, d) =>
+    Query("q_triangles", (s, d) =>
       graft.graph.Triangles.triangleStats(linkGraphEdges(s, d), "s", "t",
-        smallGraphEdges = 0L)),
+        smallGraphEdges = 0L),
+      // triangle replay: canonical undirected edges, degree-ordered
+      // orientation, 2-path join closed against the oriented edges
+      Sql(s"""WITH $linkGraphCtes,
+       $triangleCtes,
+       tn AS (SELECT node, count(*) AS t FROM (
+                SELECT s AS node FROM tr
+                UNION ALL SELECT a FROM tr
+                UNION ALL SELECT b FROM tr) GROUP BY 1)
+       SELECT deg.node, deg.d AS degree,
+         coalesce(tn.t, 0) AS triangles,
+         CASE WHEN deg.d >= 2 THEN
+           ((2 * coalesce(tn.t, 0) * 20000 + deg.d * (deg.d - 1))
+            // (2 * deg.d * (deg.d - 1))) / 10000.0
+         ELSE 0.0 END AS clustering
+       FROM deg LEFT JOIN tn ON deg.node = tn.node
+       ORDER BY deg.node""")),
     // The same readout through the bounded-graph in-task path
     // (sorted-adjacency intersect, one job) — oracled against the
     // IDENTICAL replay, so fast ≡ distributed is hash-gated
-    "q_triangles_fast" -> ((s, d) =>
-      graft.graph.Triangles.triangleStats(linkGraphEdges(s, d), "s", "t")),
+    Query("q_triangles_fast", (s, d) =>
+      graft.graph.Triangles.triangleStats(linkGraphEdges(s, d), "s", "t"),
+      // the in-task fast twin runs against the IDENTICAL replay — a
+      // divergence between the sorted-adjacency intersect and the
+      // distributed 2-path join fails the hash gate itself
+      SameAs("q_triangles")),
     // Degree assortativity of the same graph: Pearson over endpoint
     // degrees, exact integer moment sums, one division per graph
-    "q_assortativity" -> ((s, d) =>
-      graft.graph.Triangles.assortativity(linkGraphEdges(s, d), "s", "t")),
+    Query("q_assortativity", (s, d) =>
+      graft.graph.Triangles.assortativity(linkGraphEdges(s, d), "s", "t"),
+      // assortativity replay: five exact moment sums, one guarded
+      // division; m is even (both orientations), so m/2 is exact
+      Sql(s"""WITH $linkGraphCtes,
+         sym AS (SELECT u, v FROM und UNION ALL SELECT v, u FROM und),
+         j AS (SELECT du.d AS du, dv.d AS dv
+               FROM sym
+               JOIN deg du ON sym.u = du.node
+               JOIN deg dv ON sym.v = dv.node),
+         a AS (SELECT count(*) AS m,
+                 CAST(sum(du) AS BIGINT) AS sx,
+                 CAST(sum(dv) AS BIGINT) AS sy,
+                 CAST(sum(du * dv) AS BIGINT) AS sxy,
+                 CAST(sum(du * du) AS BIGINT) AS sxx,
+                 CAST(sum(dv * dv) AS BIGINT) AS syy
+               FROM j)
+         SELECT CAST(m / 2 AS BIGINT) AS n_edges,
+           CASE WHEN (m * sxx - sx * sx) > 0 AND (m * syy - sy * sy) > 0
+                THEN round(CAST(m * sxy - sx * sy AS DOUBLE) /
+                       sqrt(CAST(m * sxx - sx * sx AS DOUBLE) *
+                            CAST(m * syy - sy * sy AS DOUBLE)), 4)
+           END AS assortativity
+         FROM a""")),
     // One-row structure dashboard of the link graph
-    "q_graph_summary" -> ((s, d) =>
-      graft.graph.Triangles.graphSummary(linkGraphEdges(s, d), "s", "t")),
+    Query("q_graph_summary", (s, d) =>
+      graft.graph.Triangles.graphSummary(linkGraphEdges(s, d), "s", "t"),
+      // whole-graph dashboard: counts + triangles + the assortativity
+      // expression, all from the shared graph CTEs
+      Sql(s"""WITH $linkGraphCtes,
+         $triangleCtes,
+         sym AS (SELECT u, v FROM und UNION ALL SELECT v, u FROM und),
+         j AS (SELECT du.d AS du, dv.d AS dv
+               FROM sym
+               JOIN deg du ON sym.u = du.node
+               JOIN deg dv ON sym.v = dv.node),
+         am AS (SELECT count(*) AS m,
+                 CAST(sum(du) AS BIGINT) AS sx,
+                 CAST(sum(dv) AS BIGINT) AS sy,
+                 CAST(sum(du * dv) AS BIGINT) AS sxy,
+                 CAST(sum(du * du) AS BIGINT) AS sxx,
+                 CAST(sum(dv * dv) AS BIGINT) AS syy
+               FROM j)
+         SELECT (SELECT count(*) FROM deg) AS n_nodes,
+           (SELECT count(*) FROM und) AS n_edges,
+           (SELECT count(*) FROM tr) AS n_triangles,
+           (SELECT CASE WHEN (m * sxx - sx * sx) > 0
+                         AND (m * syy - sy * sy) > 0
+                   THEN round(CAST(m * sxy - sx * sy AS DOUBLE) /
+                          sqrt(CAST(m * sxx - sx * sx AS DOUBLE) *
+                               CAST(m * syy - sy * sy AS DOUBLE)), 4)
+                   END FROM am) AS assortativity""")),
     // 2-core of the same graph by synchronous peeling to fixpoint:
     // the pendant-chain tails drop in round 1, their middle links in
     // round 2, triangles and star heads survive; the recorded round
     // count generates an exact per-round DuckDB replay (the
     // ivfKmeansOracle lifecycle)
-    "q_kcore" -> ((s, d) => {
+    Query("q_kcore", (s, d) => {
       lastOracleDir = d
       // smallGraphEdges=0 pins the distributed peel — the 100 TB
       // shape — through the oracle gate; the in-task fast path is
@@ -131,21 +224,31 @@ private[graft] trait GraphEntries extends EntryInfra {
         smallGraphEdges = 0L)
       kcoreRounds.put(d, Integer.valueOf(r.rounds))
       r.members
-    }),
+    },
+      Generated(() => kcoreOracle)),
     // Community detection: 4 synchronous label-propagation rounds
     // over the link graph, ties to the smallest label, min-member
     // canonical community names. smallGraphEdges=0 pins the
     // distributed per-round shape — the 100 TB plan — through the
     // oracle gate (the q_kcore convention); the in-task fast path is
     // pinned label-for-label equal in CommunitiesSpec
-    "q_communities" -> ((s, d) =>
+    Query("q_communities", (s, d) =>
       graft.graph.Communities.labelPropagation(linkGraphEdges(s, d),
-        "s", "t", rounds = 4, smallGraphEdges = 0L)),
+        "s", "t", rounds = 4, smallGraphEdges = 0L),
+      // LPA replay: one CTE per synchronous round (most-frequent
+      // neighbor label, ties to the smallest — row_number over the
+      // grouped vote counts), min-member canonical relabel; both
+      // execution paths gate on the same replay
+      Sql(s"""WITH $linkGraphCtes,
+         ${lpaChainCtes(4)}
+         SELECT node, community FROM fin ORDER BY node""")),
     // the bounded-graph serving path, gated by the SAME oracle SQL —
     // a divergence between the paths fails the gate itself
-    "q_communities_fast" -> ((s, d) =>
+    Query("q_communities_fast", (s, d) =>
       graft.graph.Communities.labelPropagation(linkGraphEdges(s, d),
-        "s", "t", rounds = 4)),
+        "s", "t", rounds = 4),
+      // the in-task fast twin must label identically
+      SameAs("q_communities")),
     // Ingest-time community assignment: new nodes (one per order,
     // +3e9 id offset) attach to the link graph and adopt the majority
     // FROZEN label among their neighbors — one LPA round against the
@@ -161,127 +264,16 @@ private[graft] trait GraphEntries extends EntryInfra {
     // plans ZERO exchanges and the query never re-canonicalizes.
     // Same oracle SQL as before: staged ≡ one-shot is gated by the
     // hash itself (CommunitiesSpec also pins row parity + plan shape)
-    "q_communities_probe" -> ((s, d) =>
+    Query("q_communities_probe", (s, d) =>
       graft.graph.Communities.assignFromStaged(
         communityProbeNodes(s, d),
         builtCommunityProbeEdges(s, d),
-        builtCommunityLabelsBucketed(s, d))),
-    // One-row partition-quality readout: exact integer-rational
-    // modularity of the LPA partition (Newman-Girvan), the number a
-    // curation owner reads before trusting community-level decisions
-    "q_modularity" -> ((s, d) =>
-      graft.graph.Communities.modularityOfLpa(
-        linkGraphEdges(s, d), "s", "t", rounds = 4)),
-    // Community-size histogram — one blob, all singletons, or a real
-    // distribution? |distinct sizes| rows off the same LPA partition
-    "q_community_sizes" -> ((s, d) =>
-      graft.graph.Communities.communitySizes(
-        graft.graph.Communities.labelPropagation(
-          linkGraphEdges(s, d), "s", "t", rounds = 4))),
-    // TrustRank: teleport restricted to trusted seed hubs (node ids
-    // divisible by 64 — a subset of the 16-group heads); rank flows
-    // outward from seeds, unreachable regions starve toward zero
-    "q_pagerank_personalized" -> ((s, d) => {
-      val k = Tables.orders(s, d).select(col("o_orderkey").as("k"))
-      val edges = k
-        .select(col("k").as("a"), (col("k") - col("k") % 4).as("b"))
-        .union(k.select((col("k") - col("k") % 4).as("a"),
-          (col("k") - col("k") % 16).as("b")))
-      // smallGraphEdges=0 pins the distributed rounds — the
-      // cluster-scale shape — through the oracle gate (the q_pagerank
-      // convention); the fast-path twin below serves bounded graphs
-      graft.graph.PageRank.personalizedPageRank(edges, "a", "b",
-          n => n % 64 === 0, iterations = 8, smallGraphEdges = 0L)
-        .select(col("node"), round(col("rank"), 10).as("rank"))
-        .orderBy(col("node"))
-    }),
-    // the bounded-graph serving path: identical recurrence in one
-    // in-task CSR iteration, gated by the SAME oracle SQL — a hash
-    // divergence between the paths fails the gate itself
-    "q_pagerank_personalized_fast" -> ((s, d) => {
-      val k = Tables.orders(s, d).select(col("o_orderkey").as("k"))
-      val edges = k
-        .select(col("k").as("a"), (col("k") - col("k") % 4).as("b"))
-        .union(k.select((col("k") - col("k") % 4).as("a"),
-          (col("k") - col("k") % 16).as("b")))
-      graft.graph.PageRank.personalizedPageRank(edges, "a", "b",
-          n => n % 64 === 0, iterations = 8)
-        .select(col("node"), round(col("rank"), 10).as("rank"))
-        .orderBy(col("node"))
-    }),
-    "q_pagerank" -> ((s, d) => {
-      val k = Tables.orders(s, d).select(col("o_orderkey").as("k"))
-      val edges = k
-        .select(col("k").as("a"), (col("k") - col("k") % 4).as("b"))
-        .union(k.select((col("k") - col("k") % 4).as("a"),
-          (col("k") - col("k") % 16).as("b")))
-      // smallGraphEdges=0 forces the distributed rounds — the shape a
-      // cluster-scale graph runs — through the oracle gate; the
-      // in-task fast path is pinned ulp-equal in PageRankSpec
-      graft.graph.PageRank.pageRank(edges, "a", "b", iterations = 8,
-          smallGraphEdges = 0L)
-        .select(col("node"), round(col("rank"), 10).as("rank"))
-        .orderBy(col("node"))
-    }),
-  )
-
-  protected def graphStaticOracles: Map[String, String] = Map(
-    "q_components" ->
-      """WITH e0 AS (
-           SELECT o_orderkey AS a, o_orderkey - o_orderkey % 4 AS b FROM orders
-           UNION
-           SELECT o_orderkey - o_orderkey % 4 AS a,
-                  o_orderkey - o_orderkey % 16 AS b FROM orders),
-         e AS (SELECT a, b FROM e0 WHERE a <> b),
-         n AS (SELECT a AS node FROM e UNION SELECT b AS node FROM e)
-         SELECT node, node - node % 16 AS component FROM n ORDER BY node""",
-    "q_components_star" ->
-      """WITH e0 AS (
-           SELECT o_orderkey AS a, o_orderkey - o_orderkey % 4 AS b FROM orders
-           UNION
-           SELECT o_orderkey - o_orderkey % 4 AS a,
-                  o_orderkey - o_orderkey % 16 AS b FROM orders),
-         e AS (SELECT a, b FROM e0 WHERE a <> b),
-         n AS (SELECT a AS node FROM e UNION SELECT b AS node FROM e)
-         SELECT node, node - node % 16 AS component FROM n ORDER BY node""",
-    // the in-task union-find fast path shares the closed-form replay
-    // verbatim — fast ≡ distributed is the hash gate itself
-    "q_components_fast" ->
-      """WITH e0 AS (
-           SELECT o_orderkey AS a, o_orderkey - o_orderkey % 4 AS b FROM orders
-           UNION
-           SELECT o_orderkey - o_orderkey % 4 AS a,
-                  o_orderkey - o_orderkey % 16 AS b FROM orders),
-         e AS (SELECT a, b FROM e0 WHERE a <> b),
-         n AS (SELECT a AS node FROM e UNION SELECT b AS node FROM e)
-         SELECT node, node - node % 16 AS component FROM n ORDER BY node""",
-    "q_pagerank" -> pageRankOracle(8),
-    "q_pagerank_personalized" -> personalizedPageRankOracle(8),
-    "q_pagerank_personalized_fast" -> personalizedPageRankOracle(8),
-    // LPA replay: one CTE per synchronous round (most-frequent
-    // neighbor label, ties to the smallest — row_number over the
-    // grouped vote counts), min-member canonical relabel; both
-    // execution paths gate on the same replay
-    "q_communities" ->
-      (s"""WITH $linkGraphCtes,
-         ${lpaChainCtes(4)}
-         SELECT node, community FROM fin ORDER BY node"""),
-    "q_communities_fast" ->
-      (s"""WITH $linkGraphCtes,
-         ${lpaChainCtes(4)}
-         SELECT node, community FROM fin ORDER BY node"""),
-    "q_community_sizes" ->
-      (s"""WITH $linkGraphCtes,
-         ${lpaChainCtes(4)}
-         SELECT size, count(*) AS n_communities FROM (
-           SELECT community, count(*) AS size FROM fin GROUP BY 1)
-         GROUP BY 1 ORDER BY size"""),
-    // ingest probe replay: ONE more LPA round for the new nodes,
-    // voting over the frozen 4-round partition; no-labeled-neighbor
-    // probes (ids ≡ 2 mod 5, linked only to another new node) fall
-    // back to their own id
-    "q_communities_probe" ->
-      (s"""WITH $linkGraphCtes,
+        builtCommunityLabelsBucketed(s, d)),
+      // ingest probe replay: ONE more LPA round for the new nodes,
+      // voting over the frozen 4-round partition; no-labeled-neighbor
+      // probes (ids ≡ 2 mod 5, linked only to another new node) fall
+      // back to their own id
+      Sql(s"""WITH $linkGraphCtes,
          ${lpaChainCtes(4)},
          pk AS (SELECT o_orderkey AS k, o_orderkey - o_orderkey % 4 AS g
                 FROM orders),
@@ -306,14 +298,19 @@ private[graft] trait GraphEntries extends EntryInfra {
                   FROM votes)
          SELECT pn.node, coalesce(b.community, pn.node) AS community
          FROM pn LEFT JOIN best b ON pn.node = b.node AND b.rn = 1
-         ORDER BY pn.node"""),
-    // modularity as the exact integer rational sum(4*m*e_c - D_c^2)
-    // / 4m^2 over the replayed partition; the double readout is the
-    // house 4-decimal long division, +1-shifted so the numerator
-    // stays non-negative (integer-division semantics for negatives
-    // differ between engines)
-    "q_modularity" ->
-      (s"""WITH $linkGraphCtes,
+         ORDER BY pn.node""")),
+    // One-row partition-quality readout: exact integer-rational
+    // modularity of the LPA partition (Newman-Girvan), the number a
+    // curation owner reads before trusting community-level decisions
+    Query("q_modularity", (s, d) =>
+      graft.graph.Communities.modularityOfLpa(
+        linkGraphEdges(s, d), "s", "t", rounds = 4),
+      // modularity as the exact integer rational sum(4*m*e_c - D_c^2)
+      // / 4m^2 over the replayed partition; the double readout is the
+      // house 4-decimal long division, +1-shifted so the numerator
+      // stays non-negative (integer-division semantics for negatives
+      // differ between engines)
+      Sql(s"""WITH $linkGraphCtes,
          ${lpaChainCtes(4)},
          mtot AS (SELECT count(*) AS m FROM und),
          dc AS (SELECT f.community, CAST(sum(deg.d) AS BIGINT) AS dsum
@@ -337,78 +334,68 @@ private[graft] trait GraphEntries extends EntryInfra {
               // (2 * CAST(4 * mtot.m * mtot.m AS HUGEINT))
               / 10000.0 - 1.0
            END AS modularity
-         FROM mtot, nm"""),
-    // triangle replay: canonical undirected edges, degree-ordered
-    // orientation, 2-path join closed against the oriented edges
-    "q_triangles" -> trianglesOracle,
-    // the in-task fast twin runs against the IDENTICAL replay — a
-    // divergence between the sorted-adjacency intersect and the
-    // distributed 2-path join fails the hash gate itself
-    "q_triangles_fast" -> trianglesOracle,
-    "q_graph_degrees" ->
-      """WITH e0 AS (
-           SELECT o_orderkey AS a, o_orderkey - o_orderkey % 4 AS b FROM orders
-           UNION
-           SELECT o_orderkey - o_orderkey % 4 AS a,
-                  o_orderkey - o_orderkey % 16 AS b FROM orders),
-         e AS (SELECT a, b FROM e0 WHERE a <> b),
-         n AS (SELECT a AS node FROM e UNION SELECT b AS node FROM e),
-         deg AS (SELECT a AS node, count(*) AS d FROM e GROUP BY a)
-         SELECT coalesce(deg.d, 0) AS out_degree,
-                count(*) AS n_nodes
-         FROM n LEFT JOIN deg ON n.node = deg.node
-         GROUP BY 1 ORDER BY out_degree""",
-    // whole-graph dashboard: counts + triangles + the assortativity
-    // expression, all from the shared graph CTEs
-    "q_graph_summary" ->
-      (s"""WITH $linkGraphCtes,
-         $triangleCtes,
-         sym AS (SELECT u, v FROM und UNION ALL SELECT v, u FROM und),
-         j AS (SELECT du.d AS du, dv.d AS dv
-               FROM sym
-               JOIN deg du ON sym.u = du.node
-               JOIN deg dv ON sym.v = dv.node),
-         am AS (SELECT count(*) AS m,
-                 CAST(sum(du) AS BIGINT) AS sx,
-                 CAST(sum(dv) AS BIGINT) AS sy,
-                 CAST(sum(du * dv) AS BIGINT) AS sxy,
-                 CAST(sum(du * du) AS BIGINT) AS sxx,
-                 CAST(sum(dv * dv) AS BIGINT) AS syy
-               FROM j)
-         SELECT (SELECT count(*) FROM deg) AS n_nodes,
-           (SELECT count(*) FROM und) AS n_edges,
-           (SELECT count(*) FROM tr) AS n_triangles,
-           (SELECT CASE WHEN (m * sxx - sx * sx) > 0
-                         AND (m * syy - sy * sy) > 0
-                   THEN round(CAST(m * sxy - sx * sy AS DOUBLE) /
-                          sqrt(CAST(m * sxx - sx * sx AS DOUBLE) *
-                               CAST(m * syy - sy * sy AS DOUBLE)), 4)
-                   END FROM am) AS assortativity"""),
-    // assortativity replay: five exact moment sums, one guarded
-    // division; m is even (both orientations), so m/2 is exact
-    "q_assortativity" ->
-      (s"""WITH $linkGraphCtes,
-         sym AS (SELECT u, v FROM und UNION ALL SELECT v, u FROM und),
-         j AS (SELECT du.d AS du, dv.d AS dv
-               FROM sym
-               JOIN deg du ON sym.u = du.node
-               JOIN deg dv ON sym.v = dv.node),
-         a AS (SELECT count(*) AS m,
-                 CAST(sum(du) AS BIGINT) AS sx,
-                 CAST(sum(dv) AS BIGINT) AS sy,
-                 CAST(sum(du * dv) AS BIGINT) AS sxy,
-                 CAST(sum(du * du) AS BIGINT) AS sxx,
-                 CAST(sum(dv * dv) AS BIGINT) AS syy
-               FROM j)
-         SELECT CAST(m / 2 AS BIGINT) AS n_edges,
-           CASE WHEN (m * sxx - sx * sx) > 0 AND (m * syy - sy * sy) > 0
-                THEN round(CAST(m * sxy - sx * sy AS DOUBLE) /
-                       sqrt(CAST(m * sxx - sx * sx AS DOUBLE) *
-                            CAST(m * syy - sy * sy AS DOUBLE)), 4)
-           END AS assortativity
-         FROM a"""),
+         FROM mtot, nm""")),
+    // Community-size histogram — one blob, all singletons, or a real
+    // distribution? |distinct sizes| rows off the same LPA partition
+    Query("q_community_sizes", (s, d) =>
+      graft.graph.Communities.communitySizes(
+        graft.graph.Communities.labelPropagation(
+          linkGraphEdges(s, d), "s", "t", rounds = 4)),
+      Sql(s"""WITH $linkGraphCtes,
+         ${lpaChainCtes(4)}
+         SELECT size, count(*) AS n_communities FROM (
+           SELECT community, count(*) AS size FROM fin GROUP BY 1)
+         GROUP BY 1 ORDER BY size""")),
+    // TrustRank: teleport restricted to trusted seed hubs (node ids
+    // divisible by 64 — a subset of the 16-group heads); rank flows
+    // outward from seeds, unreachable regions starve toward zero
+    Query("q_pagerank_personalized", (s, d) => {
+      val k = Tables.orders(s, d).select(col("o_orderkey").as("k"))
+      val edges = k
+        .select(col("k").as("a"), (col("k") - col("k") % 4).as("b"))
+        .union(k.select((col("k") - col("k") % 4).as("a"),
+          (col("k") - col("k") % 16).as("b")))
+      // smallGraphEdges=0 pins the distributed rounds — the
+      // cluster-scale shape — through the oracle gate (the q_pagerank
+      // convention); the fast-path twin below serves bounded graphs
+      graft.graph.PageRank.personalizedPageRank(edges, "a", "b",
+          n => n % 64 === 0, iterations = 8, smallGraphEdges = 0L)
+        .select(col("node"), round(col("rank"), 10).as("rank"))
+        .orderBy(col("node"))
+    },
+      Sql(personalizedPageRankOracle(8))),
+    // the bounded-graph serving path: identical recurrence in one
+    // in-task CSR iteration, gated by the SAME oracle SQL — a hash
+    // divergence between the paths fails the gate itself
+    Query("q_pagerank_personalized_fast", (s, d) => {
+      val k = Tables.orders(s, d).select(col("o_orderkey").as("k"))
+      val edges = k
+        .select(col("k").as("a"), (col("k") - col("k") % 4).as("b"))
+        .union(k.select((col("k") - col("k") % 4).as("a"),
+          (col("k") - col("k") % 16).as("b")))
+      graft.graph.PageRank.personalizedPageRank(edges, "a", "b",
+          n => n % 64 === 0, iterations = 8)
+        .select(col("node"), round(col("rank"), 10).as("rank"))
+        .orderBy(col("node"))
+    },
+      // the in-task fast twin must rank identically
+      SameAs("q_pagerank_personalized")),
+    Query("q_pagerank", (s, d) => {
+      val k = Tables.orders(s, d).select(col("o_orderkey").as("k"))
+      val edges = k
+        .select(col("k").as("a"), (col("k") - col("k") % 4).as("b"))
+        .union(k.select((col("k") - col("k") % 4).as("a"),
+          (col("k") - col("k") % 16).as("b")))
+      // smallGraphEdges=0 forces the distributed rounds — the shape a
+      // cluster-scale graph runs — through the oracle gate; the
+      // in-task fast path is pinned ulp-equal in PageRankSpec
+      graft.graph.PageRank.pageRank(edges, "a", "b", iterations = 8,
+          smallGraphEdges = 0L)
+        .select(col("node"), round(col("rank"), 10).as("rank"))
+        .orderBy(col("node"))
+    },
+      Sql(pageRankOracle(8))),
   )
-
   /** Build-once WRITTEN LPA community labels of the link graph (same
     * lifecycle) — the frozen partition the ingest probe serves from.
     */
@@ -500,7 +487,7 @@ private[graft] trait GraphEntries extends EntryInfra {
     * Empty until q_kcore has run in this JVM → rows-only, the
     * ivfKmeansOracle lifecycle.
     */
-  protected def kcoreOracle: Option[(String, String)] =
+  protected def kcoreOracle: Option[String] =
     Option(lastOracleDir).flatMap(d => Option(kcoreRounds.get(d))).map { rr =>
       val r = rr.intValue
       val rounds = (1 to r).map { i =>
@@ -513,8 +500,7 @@ private[graft] trait GraphEntries extends EntryInfra {
              GROUP BY sym.u)
            WHERE dd >= 2)"""
       }.mkString
-      "q_kcore" ->
-        s"""WITH $linkGraphCtes,
+      s"""WITH $linkGraphCtes,
          sym AS MATERIALIZED (
            SELECT u, v FROM und UNION ALL SELECT v, u FROM und),
          a0 AS MATERIALIZED (SELECT DISTINCT u AS node FROM sym)$rounds
@@ -644,26 +630,6 @@ private[graft] trait GraphEntries extends EntryInfra {
     * s(v)·((1−d) + d·dm) + d·contrib, the exact expression shape the
     * operator evaluates (IEEE determinism does the rest).
     */
-  /** Triangle replay shared by the distributed pin and its in-task
-    * fast twin: canonical undirected edges, degree-ordered
-    * orientation, 2-path join closed against the oriented edges.
-    */
-  protected def trianglesOracle: String =
-    s"""WITH $linkGraphCtes,
-       $triangleCtes,
-       tn AS (SELECT node, count(*) AS t FROM (
-                SELECT s AS node FROM tr
-                UNION ALL SELECT a FROM tr
-                UNION ALL SELECT b FROM tr) GROUP BY 1)
-       SELECT deg.node, deg.d AS degree,
-         coalesce(tn.t, 0) AS triangles,
-         CASE WHEN deg.d >= 2 THEN
-           ((2 * coalesce(tn.t, 0) * 20000 + deg.d * (deg.d - 1))
-            // (2 * deg.d * (deg.d - 1))) / 10000.0
-         ELSE 0.0 END AS clustering
-       FROM deg LEFT JOIN tn ON deg.node = tn.node
-       ORDER BY deg.node"""
-
   protected def personalizedPageRankOracle(iters: Int): String = {
     val seed = "p.node % 64 = 0"
     val rounds = (1 to iters).map { k =>

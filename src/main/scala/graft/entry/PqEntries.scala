@@ -7,109 +7,128 @@ import org.apache.spark.sql.functions._
 import graft.ops._
 import graft.similarity.Similarity
 
+import EntryInfra._
+
 /** Product-quantization, residual, rotation, and truncation families
   * — one module of the per-family SparkEntry split (round 14): the
-  * PQ/IVF-PQ queries and static oracles, the codebook/rotation
+  * PQ/IVF-PQ `Seq[Query]` with each oracle decision, the codebook/rotation
   * caches, the PQ index builders, and the generated PQ/rotation
   * oracles. Extends [[AnnEntries]] for the shared drift fixtures and
   * float-routing helpers. Aggregated by [[SparkEntry]].
   */
 private[graft] trait PqEntries extends AnnEntries {
 
-  protected def pqQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected def pqQueries: Seq[Query] = Seq(
     // Product quantization: per-subspace Lloyd codebook (cached,
     // build-once like the IVF centroids), narrow ADC scan in exact
     // integer micro-units — codebook + LUT inlined into a generated
     // oracle, so the approximate ranking itself is hash-matched
-    "q_knn_pq" -> ((s, d) => {
+    Query("q_knn_pq", (s, d) => {
       val cb = pqCodebookFor(s, d)
       // serve from the build-once codes table (encode once, query
       // many — the real PQ serving economics); the oracle replays the
       // full encode, so the persisted codes are still hash-gated
       Similarity.pqTopK(s.read.parquet(builtPqCodes(s, d)), cb,
         queryVec0(s, d), 10)
-    }),
+    },
+      pqOracle(_.flat)),
     // IVF-PQ: the full 100 TB serving shape — cell-partitioned PQ
     // codes, literal probe cells pruning to nProbe directories, ADC
     // scan over the probed codes only. Oracle = the generated
     // codebook replay of q_knn_pq composed with the static seed-cell
     // assignment/probe CTEs of q_ann_ivf.
-    "q_knn_pq_ivf" -> ((s, d) =>
+    Query("q_knn_pq_ivf", (s, d) =>
       Similarity.pqTopKFromIndex(s.read.parquet(builtPqIvfIndex(s, d)),
         seedCents16(s, d), pqCodebookFor(s, d), queryVec0(s, d), 10,
-        nProbe = 2)),
+        nProbe = 2),
+      pqOracle(_.ivf(""))),
     // The IVF-PQ maintenance matrix — the composed 100 TB serving
     // shape gets the same five members as the other index families,
     // each gated by the generated codebook replay (full corpus for
     // append/stream, filtered splits for erasure/as-of):
     // retry-idempotent batch append (built with the append run TWICE)
-    "q_knn_pq_ivf_incremental" -> ((s, d) =>
+    Query("q_knn_pq_ivf_incremental", (s, d) =>
       Similarity.pqTopKFromIndex(s.read.parquet(builtPqIvfIncIndex(s, d)),
         seedCents16(s, d), pqCodebookFor(s, d), queryVec0(s, d), 10,
-        nProbe = 2)),
+        nProbe = 2),
+      // append ≡ rebuild shares the full-corpus replay
+      SameAs("q_knn_pq_ivf")),
     // erasure: ids ≡ 3 mod 7 tombstoned; the layout-generic reader
     // anti-joins — tombstoned ≡ rebuild-on-remaining
-    "q_knn_pq_ivf_deleted" -> ((s, d) =>
+    Query("q_knn_pq_ivf_deleted", (s, d) =>
       Similarity.pqTopKFromIndex(
         Similarity.readIvfIndex(s, builtPqIvfDelIndex(s, d)),
         seedCents16(s, d), pqCodebookFor(s, d), queryVec0(s, d), 10,
-        nProbe = 2)),
+        nProbe = 2),
+      // tombstoned ≡ rebuild-on-remaining
+      pqOracle(_.ivf(" AND v.vec_id % 7 <> 3"))),
     // ...and compacted: erasure made physical, a plain cell scan
     // serves the erased state (shares the deleted replay)
-    "q_knn_pq_ivf_compacted" -> ((s, d) =>
+    Query("q_knn_pq_ivf_compacted", (s, d) =>
       Similarity.pqTopKFromIndex(
         s.read.parquet(builtPqIvfCmpIndex(s, d)),
         seedCents16(s, d), pqCodebookFor(s, d), queryVec0(s, d), 10,
-        nProbe = 2)),
+        nProbe = 2),
+      // compacted ≡ tombstoned
+      SameAs("q_knn_pq_ivf_deleted")),
     // snapshot by batch name: the probe as of the base build — the
     // "inc1" append's ids ≡ 1 mod 8 must vanish
-    "q_knn_pq_ivf_asof" -> ((s, d) =>
+    Query("q_knn_pq_ivf_asof", (s, d) =>
       Similarity.pqTopKFromIndex(
         Similarity.readIvfIndexAsOf(s, builtPqIvfIncIndex(s, d),
           Seq("build")),
         seedCents16(s, d), pqCodebookFor(s, d), queryVec0(s, d), 10,
-        nProbe = 2)),
+        nProbe = 2),
+      // as-of "build" on the incremental index: base split only
+      pqOracle(_.ivf(" AND v.vec_id % 8 <> 1"))),
     // streaming ingestion: three checkpointed micro-batches through
     // pqIndexSink — stream-built ≡ rebuild
-    "q_knn_pq_ivf_streamed" -> ((s, d) =>
+    Query("q_knn_pq_ivf_streamed", (s, d) =>
       Similarity.pqTopKFromIndex(
         s.read.parquet(builtPqIvfStreamedIndex(s, d) + "/idx"),
         seedCents16(s, d), pqCodebookFor(s, d), queryVec0(s, d), 10,
-        nProbe = 2)),
+        nProbe = 2),
+      // stream-built ≡ rebuild shares the full-corpus replay
+      SameAs("q_knn_pq_ivf")),
     // BATCHED ADC serving: 5 queries' top-10 in ONE pass over the
     // union of their probed cells — the high-QPS economics (Q pruned
     // scans collapse to one; per-query results identical to the
     // single-query path, which the shared generated oracle gates)
-    "q_knn_pq_multi" -> ((s, d) =>
+    Query("q_knn_pq_multi", (s, d) =>
       Similarity.pqMultiTopKFromIndex(
         s.read.parquet(builtPqIvfIndex(s, d)), seedCents16(s, d),
-        pqCodebookFor(s, d), multiQueryVecs(s, d), 10, nProbe = 2)),
+        pqCodebookFor(s, d), multiQueryVecs(s, d), 10, nProbe = 2),
+      pqRecallOracle(_.multi)),
     // QUERY-TABLE batched ADC serving (round-15 verdict #1): the
     // same 5-query batch as a DataFrame — each query's integer LUT
     // computed IN-PLAN on the broadcast probe side, O(1) plan size
     // in Q. Shares the literal twin's generated replay (batched ≡
     // singles stays the hash gate)
-    "q_knn_pq_multi_qt" -> ((s, d) =>
+    Query("q_knn_pq_multi_qt", (s, d) =>
       Similarity.pqMultiTopKFromIndexQT(
         s.read.parquet(builtPqIvfIndex(s, d)), seedCents16(s, d),
-        pqCodebookFor(s, d), multiQueryFrame(s, d), 10, nProbe = 2)),
+        pqCodebookFor(s, d), multiQueryFrame(s, d), 10, nProbe = 2),
+      // the query-table twin serves the SAME 5-query batch under the
+      // SAME batched ≡ singles contract — one oracle, two plan shapes
+      SameAs("q_knn_pq_multi")),
     // PQ operating-point evaluation: recall@10 of the written IVF-PQ
     // index's ADC ranking (nProbe=2 of 16 cells, 8-byte codes)
     // against exact float brute force for 5 queries — the doubly-
     // lossy path's q_ann_recall. Generated oracle replays encode,
     // per-query integer LUTs, probe routing, and the exact baseline,
     // so the recall numbers themselves are hash-gated
-    "q_pq_recall" -> ((s, d) =>
+    Query("q_pq_recall", (s, d) =>
       Similarity.pqRecall(s.read.parquet(builtPqIvfIndex(s, d)),
         Tables.embeddings(s, d), seedCents16(s, d), pqCodebookFor(s, d),
-        Seq(0L, 1L, 2L, 3L, 4L), 10, 2)),
+        Seq(0L, 1L, 2L, 3L, 4L), 10, 2),
+      pqRecallOracle(_.recall)),
     // The OPERATING CURVE behind q_pq_recall's single point: the
     // same ADC serving path swept over nProbe ∈ {1, 2, 4, 8} of 16
     // cells — the knob a deployment actually turns when recall at
     // the default probe width is not enough. Per-(n_probe, query)
     // rows stay exact; the generated oracle replays the shared
     // encode + LUTs once and re-ranks per probe level
-    "q_pq_recall_curve" -> ((s, d) => {
+    Query("q_pq_recall_curve", (s, d) => {
       val idx = s.read.parquet(builtPqIvfIndex(s, d))
       val emb = Tables.embeddings(s, d)
       val qs = Seq(0L, 1L, 2L, 3L, 4L)
@@ -119,15 +138,19 @@ private[graft] trait PqEntries extends AnnEntries {
           .withColumn("n_probe", lit(np))
       }.reduce(_.unionByName(_))
         .orderBy(col("n_probe"), col("query_id"))
-    }),
+    },
+      pqRecallOracle(_.recallCurve)),
     // Drift maintenance for the composed index: the (cell_old →
     // cell_new) movement matrix between the built IVF-PQ index and
     // its reclusterPqIndex refresh — shares the float recluster's
     // generated oracle VERBATIM (cell assignment is from true floats
     // in every family; one SQL, three hash gates)
-    "q_knn_pq_ivf_recluster" -> ((s, d) =>
+    Query("q_knn_pq_ivf_recluster", (s, d) =>
       Similarity.reclusterChurn(s, builtPqIvfIndex(s, d),
-        builtPqIvfReclusteredIndex(s, d))),
+        builtPqIvfReclusteredIndex(s, d)),
+      // per-row PQ encoding is index-independent and cells come from
+      // the true embeddings, so the movement matrix is the float one
+      SameAs("q_ann_ivf_recluster")),
     // The measurement that justifies a PQ refresh: the drifted corpus
     // (q_ann_ivf_recluster_recall's fixture) served from the STALE
     // index (frozen seed cells + frozen corpus codebook — exactly an
@@ -136,7 +159,7 @@ private[graft] trait PqEntries extends AnnEntries {
     // recall@10 for drift-batch queries before and after, exact float
     // baseline shared. Generated oracle replays BOTH full encode+ADC
     // pipelines, so the drop→recovery numbers are hash-gated
-    "q_pq_recluster_recall" -> ((s, d) => {
+    Query("q_pq_recluster_recall", (s, d) => {
       val dr = driftedEmbeddings(s, d)
       val qs = Seq(2000000L, 2000010L, 2000020L, 2000030L, 2000040L)
       val before = Similarity.pqRecall(
@@ -149,33 +172,38 @@ private[graft] trait PqEntries extends AnnEntries {
         driftedCentroids(s, d), driftedPqCodebook(s, d), qs, 10, 2)
         .select(col("query_id"), col("recall").as("recall_after"))
       before.join(after, Seq("query_id")).orderBy(col("query_id"))
-    }),
+    },
+      Generated(() => pqReclusterRecallOracle)),
     // Two-stage PQ serving (Jégou §V): the ADC scan SHORTLISTS 40
     // candidates from the probed cells, then the true float rows of
     // only those 40 re-rank exactly (bounded id list → In-pushdown
     // point lookups, never a corpus pass). Generated oracle replays
     // shortlist + re-rank, so the refined ranking is hash-gated
-    "q_knn_pq_refined" -> ((s, d) =>
+    Query("q_knn_pq_refined", (s, d) =>
       Similarity.pqTopKRefined(s.read.parquet(builtPqIvfIndex(s, d)),
         Tables.embeddings(s, d), seedCents16(s, d), pqCodebookFor(s, d),
-        queryVec0(s, d), 10, nProbe = 2, shortlist = 40)),
+        queryVec0(s, d), 10, nProbe = 2, shortlist = 40),
+      pqOracle(_.refined)),
     // BATCHED two-stage serving (round 14 — the two high-QPS waves
     // composed): 5 queries' shortlists from ONE code scan, every
     // re-rank from ONE bounded fetch of the union of shortlisted
     // float rows — two scans for the whole batch vs 2Q single-query
     // passes. Batched ≡ 5 single refined serves is the hash gate
-    "q_knn_pq_refined_multi" -> ((s, d) =>
+    Query("q_knn_pq_refined_multi", (s, d) =>
       Similarity.pqMultiTopKRefined(s.read.parquet(builtPqIvfIndex(s, d)),
         Tables.embeddings(s, d), seedCents16(s, d), pqCodebookFor(s, d),
-        multiQueryVecs(s, d), 10, nProbe = 2, shortlist = 40)),
+        multiQueryVecs(s, d), 10, nProbe = 2, shortlist = 40),
+      pqRecallOracle(_.refinedMulti)),
     // QUERY-TABLE batched two-stage (round-15 verdict #1): the
     // shortlist stays a DataFrame and the re-rank is a semi-join —
     // NO Q×R driver collect, no per-query isin literals. Shares the
     // literal twin's generated refined replay
-    "q_knn_pq_refined_multi_qt" -> ((s, d) =>
+    Query("q_knn_pq_refined_multi_qt", (s, d) =>
       Similarity.pqMultiTopKRefinedQT(s.read.parquet(builtPqIvfIndex(s, d)),
         Tables.embeddings(s, d), seedCents16(s, d), pqCodebookFor(s, d),
-        multiQueryFrame(s, d), 10, nProbe = 2, shortlist = 40)),
+        multiQueryFrame(s, d), 10, nProbe = 2, shortlist = 40),
+      // the query-table twin: same batch, same refined replay
+      SameAs("q_knn_pq_refined_multi")),
     // ...and with the re-rank fetch BUCKET-PRUNED (round-16 verdict
     // #1, the last streamed pass on the serving path): the float
     // table is a vec_id-bucketed catalog table, the bounded Q×R
@@ -188,31 +216,38 @@ private[graft] trait PqEntries extends AnnEntries {
     // micro-batches {0,1,2}+{3,4} through the two-stage refined plan)
     // re-sorted as one readout must equal the one-shot 5-query
     // refined serve — shares q_knn_pq_refined_multi's replay verbatim
-    "q_knn_pq_served_catalog" -> ((s, d) =>
+    Query("q_knn_pq_served_catalog", (s, d) =>
       s.read.parquet(builtRefinedServedCatalog(s, d) + "/out")
         .select(col("query_id"), col("vec_id"), col("cos_sim"))
-        .orderBy(col("query_id"), col("cos_sim").desc, col("vec_id"))),
-    "q_knn_pq_refined_multi_qt_bucketed" -> ((s, d) =>
+        .orderBy(col("query_id"), col("cos_sim").desc, col("vec_id")),
+      // the cold-tier serve sink's accumulated catalog: stream ≡
+      // the same one-shot refined replay
+      SameAs("q_knn_pq_refined_multi")),
+    Query("q_knn_pq_refined_multi_qt_bucketed", (s, d) =>
       Similarity.pqMultiTopKRefinedQTBucketed(
         s.read.parquet(builtPqIvfIndex(s, d)),
         graft.ops.BucketedTables.readTable(s, builtBucketedEmb(s, d)),
         seedCents16(s, d), pqCodebookFor(s, d),
-        multiQueryFrame(s, d), 10, nProbe = 2, shortlist = 40)),
+        multiQueryFrame(s, d), 10, nProbe = 2, shortlist = 40),
+      // bucketed ≡ streamed ≡ Q singles: the bucket-pruned re-rank
+      // fetch shares the same refined replay
+      SameAs("q_knn_pq_refined_multi")),
     // The measurement that prices the re-rank stage: recall@10 of the
     // two-stage path vs q_pq_recall's pure-ADC 0.52 — measured 0.88,
     // exactly the float routing ceiling at nProbe=2 (q_ann_recall
     // 0.90): a deep-enough shortlist recovers ALL ADC loss, and the
     // residual gap is coarse routing, which only nProbe can buy back
-    "q_pq_refined_recall" -> ((s, d) =>
+    Query("q_pq_refined_recall", (s, d) =>
       Similarity.pqRefinedRecall(s.read.parquet(builtPqIvfIndex(s, d)),
         Tables.embeddings(s, d), seedCents16(s, d), pqCodebookFor(s, d),
-        Seq(0L, 1L, 2L, 3L, 4L), 10, nProbe = 2, shortlist = 40)),
+        Seq(0L, 1L, 2L, 3L, 4L), 10, nProbe = 2, shortlist = 40),
+      pqRecallOracle(_.refinedRecall)),
     // The SHORTLIST-DEPTH operating curve behind that single point —
     // the knob a deployment sizes the re-rank I/O budget with:
     // recall@10 over R ∈ {10, 20, 40, 80} at nProbe=2. R=10 is the
     // pure-ADC point by construction (re-ranking 10 of 10 reorders,
     // never recovers); the curve saturates at the routing ceiling
-    "q_pq_refined_curve" -> ((s, d) => {
+    Query("q_pq_refined_curve", (s, d) => {
       val idx = s.read.parquet(builtPqIvfIndex(s, d))
       val emb = Tables.embeddings(s, d)
       val qs = Seq(0L, 1L, 2L, 3L, 4L)
@@ -222,17 +257,19 @@ private[graft] trait PqEntries extends AnnEntries {
       // once instead of once per depth
       Similarity.pqRefinedRecallCurve(idx, emb, seedCents16(s, d),
         pqCodebookFor(s, d), qs, 10, nProbe = 2, Seq(10, 20, 40, 80))
-    }),
+    },
+      pqRecallOracle(_.refinedCurve)),
     // The CODE-WIDTH lever, measured: the same m=8 code count with
     // 8-bit books (ksub 64 → 256, the full byte the "8-byte code"
     // budget always allowed) lifts pure-ADC recall@10 0.52 → 0.66 at
     // sf0.01 — the knob q_pq_recall_curve showed nProbe cannot turn.
     // Own trained codebook, own written index, same generated-replay
     // oracle shape
-    "q_pq_recall_wide" -> ((s, d) =>
+    Query("q_pq_recall_wide", (s, d) =>
       Similarity.pqRecall(s.read.parquet(builtWidePqIvfIndex(s, d)),
         Tables.embeddings(s, d), seedCents16(s, d),
-        widePqCodebookFor(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10, 2)),
+        widePqCodebookFor(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10, 2),
+      Generated(() => pqWideRecallOracle)),
     // RESIDUAL encoding (IVFADC proper, Jégou §III): codes quantize
     // v − c_cell instead of v; serving adds one per-cell LUT term
     // (dot(q,v) = dot(q,c_cell) + dot(q,r) decomposes exactly).
@@ -242,103 +279,73 @@ private[graft] trait PqEntries extends AnnEntries {
     // corpus, the diagnostic a deployment checks before enabling
     // residual encoding). The operator is the standard shape for
     // clustered corpora; the measurement is the when-to-use guidance
-    "q_knn_pq_residual" -> ((s, d) =>
+    Query("q_knn_pq_residual", (s, d) =>
       Similarity.residualPqTopKFromIndex(
         s.read.parquet(builtResidualPqIndex(s, d)), seedCents16(s, d),
-        residualPqCodebookFor(s, d), queryVec0(s, d), 10, nProbe = 2)),
-    "q_pq_residual_recall" -> ((s, d) =>
+        residualPqCodebookFor(s, d), queryVec0(s, d), 10, nProbe = 2),
+      residualPqOracle(_.knn)),
+    Query("q_pq_residual_recall", (s, d) =>
       Similarity.residualPqRecall(
         s.read.parquet(builtResidualPqIndex(s, d)),
         Tables.embeddings(s, d), seedCents16(s, d),
-        residualPqCodebookFor(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10, 2)),
+        residualPqCodebookFor(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10, 2),
+      residualPqOracle(_.recall)),
     // BATCHED serving for the residual store — the last cell of the
     // batched matrix (each query carries its LUT and its per-cell
     // term literal; one pass over the union of probed cells).
     // Batched ≡ 5 single residual serves is the hash gate
-    "q_knn_pq_residual_multi" -> ((s, d) =>
+    Query("q_knn_pq_residual_multi", (s, d) =>
       Similarity.residualPqMultiTopKFromIndex(
         s.read.parquet(builtResidualPqIndex(s, d)), seedCents16(s, d),
         residualPqCodebookFor(s, d), multiQueryVecs(s, d), 10,
-        nProbe = 2)),
+        nProbe = 2),
+      residualPqOracle(_.multi)),
     // QUERY-TABLE batched residual serving (round-15 verdict #1):
     // both per-query LUTs (residual codebook + per-cell term) are
     // broadcast-side COLUMNS. Shares the literal twin's generated
     // residual replay
-    "q_knn_pq_residual_multi_qt" -> ((s, d) =>
+    Query("q_knn_pq_residual_multi_qt", (s, d) =>
       Similarity.residualPqMultiTopKFromIndexQT(
         s.read.parquet(builtResidualPqIndex(s, d)), seedCents16(s, d),
         residualPqCodebookFor(s, d), multiQueryFrame(s, d), 10,
-        nProbe = 2)),
+        nProbe = 2),
+      // the query-table twin: same batch, same residual replay
+      SameAs("q_knn_pq_residual_multi")),
     // Two-stage serving over the RESIDUAL store (round 14 — the
     // composition the IVFADC family lacked): residual-ADC shortlist
     // of 40 from the probed cells, exact re-rank of only those float
     // rows — the same bounded-In-pushdown tail as q_knn_pq_refined.
     // Generated oracle replays residual encode + shortlist + re-rank
-    "q_knn_pq_residual_refined" -> ((s, d) =>
+    Query("q_knn_pq_residual_refined", (s, d) =>
       Similarity.residualPqTopKRefined(
         s.read.parquet(builtResidualPqIndex(s, d)),
         Tables.embeddings(s, d), seedCents16(s, d),
         residualPqCodebookFor(s, d), queryVec0(s, d), 10, nProbe = 2,
-        shortlist = 40)),
+        shortlist = 40),
+      residualPqOracle(_.refined)),
     // ...and its measured operating point: the re-rank recovers
     // residual-ADC loss up to the shared routing ceiling, so raw vs
     // residual codes wash out under a deep shortlist — the store
     // decision stays with the residual-norm diagnostic
-    "q_pq_residual_refined_recall" -> ((s, d) =>
+    Query("q_pq_residual_refined_recall", (s, d) =>
       Similarity.residualPqRefinedRecall(
         s.read.parquet(builtResidualPqIndex(s, d)),
         Tables.embeddings(s, d), seedCents16(s, d),
         residualPqCodebookFor(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10, 2,
-        40)),
+        40),
+      residualPqOracle(_.refinedRecall)),
     // The FOURTH compression lever: prefix truncation (Matryoshka) —
     // recall@10 serving only the first d ∈ {8,16,32,64} components
     // vs the full-dim exact ranking. No artifact, just a sliced
     // scan at dim/d× less I/O; the measured decay is the
     // un-front-loaded baseline (these embeddings are not
     // MRL-trained). Static oracle replays every prefix ranking
-    "q_truncation_recall" -> ((s, d) =>
+    Query("q_truncation_recall", (s, d) =>
       Similarity.truncationRecall(Tables.embeddings(s, d),
-        Seq(0L, 1L, 2L, 3L, 4L), 10, Seq(8, 16, 32, 64))),
-    // ...and the FRONT-LOADED twin: the same prefixes after the
-    // corpus's principal rotation (PCA axes as a frozen literal
-    // artifact — Matryoshka-without-retraining). Prices exactly what
-    // variance front-loading buys back at each prefix; the full-dim
-    // level is the rotation-invariance sanity row. Generated oracle
-    // replays the projection and every prefix ranking
-    "q_truncation_recall_rotated" -> ((s, d) =>
-      Similarity.rotatedTruncationRecall(Tables.embeddings(s, d),
-        principalRotationFor(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10,
-        Seq(8, 16, 32, 64))),
-    // ROTATION UNDER DRIFT (round-13 verdict #5, completing the
-    // fourth compression axis's maintenance story): the rotation is
-    // trained on the REFERENCE corpus, then a variance-shifted
-    // re-ingest lands (upper-half components ×4 — the negation
-    // fixture can't move second moments) and drifted-batch queries
-    // serve through rotated-prefix truncation — recall with the
-    // stale rotation vs one re-trained on the drifted corpus, per
-    // prefix. Generated oracle replays BOTH projections, both
-    // rankings, and the exact baseline over the drifted corpus
-    "q_truncation_drift" -> ((s, d) => {
-      val de = varianceDriftedEmbeddings(s, d)
-      val qids = Seq(3000000L, 3000004L, 3000008L, 3000012L, 3000016L)
-      val stale = Similarity.rotatedTruncationRecall(de,
-        principalRotationFor(s, d), qids, 10, Seq(8, 16))
-        .select(col("dims"), col("query_id"), col("n_exact"),
-          col("recall").as("recall_stale"))
-      val fresh = Similarity.rotatedTruncationRecall(de,
-        driftedRotationFor(s, d), qids, 10, Seq(8, 16))
-        .select(col("dims"), col("query_id"),
-          col("recall").as("recall_refreshed"))
-      stale.join(fresh, Seq("dims", "query_id"))
-        .orderBy(col("dims"), col("query_id"))
-    }),
-  )
-
-  protected def pqStaticOracles: Map[String, String] = Map(
-    // the truncation (Matryoshka) operating curve: every prefix
-    // ranking + the full-dim exact baseline replay — fully static
-    "q_truncation_recall" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve
+        Seq(0L, 1L, 2L, 3L, 4L), 10, Seq(8, 16, 32, 64)),
+      // the truncation (Matryoshka) operating curve: every prefix
+      // ranking + the full-dim exact baseline replay — fully static
+      Sql(s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve
                     FROM embeddings),
          qv AS (SELECT vec_id AS query_id, ve AS qe FROM v
                 WHERE vec_id IN (0, 1, 2, 3, 4)),
@@ -351,9 +358,43 @@ private[graft] trait PqEntries extends AnnEntries {
          SELECT * FROM (
            ${truncationLevelSql(8)} UNION ALL ${truncationLevelSql(16)}
            UNION ALL ${truncationLevelSql(32)} UNION ALL ${truncationLevelSql(64)})
-         ORDER BY dims, query_id""",
+         ORDER BY dims, query_id""")),
+    // ...and the FRONT-LOADED twin: the same prefixes after the
+    // corpus's principal rotation (PCA axes as a frozen literal
+    // artifact — Matryoshka-without-retraining). Prices exactly what
+    // variance front-loading buys back at each prefix; the full-dim
+    // level is the rotation-invariance sanity row. Generated oracle
+    // replays the projection and every prefix ranking
+    Query("q_truncation_recall_rotated", (s, d) =>
+      Similarity.rotatedTruncationRecall(Tables.embeddings(s, d),
+        principalRotationFor(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10,
+        Seq(8, 16, 32, 64)),
+      Generated(() => rotatedTruncationOracle)),
+    // ROTATION UNDER DRIFT (round-13 verdict #5, completing the
+    // fourth compression axis's maintenance story): the rotation is
+    // trained on the REFERENCE corpus, then a variance-shifted
+    // re-ingest lands (upper-half components ×4 — the negation
+    // fixture can't move second moments) and drifted-batch queries
+    // serve through rotated-prefix truncation — recall with the
+    // stale rotation vs one re-trained on the drifted corpus, per
+    // prefix. Generated oracle replays BOTH projections, both
+    // rankings, and the exact baseline over the drifted corpus
+    Query("q_truncation_drift", (s, d) => {
+      val de = varianceDriftedEmbeddings(s, d)
+      val qids = Seq(3000000L, 3000004L, 3000008L, 3000012L, 3000016L)
+      val stale = Similarity.rotatedTruncationRecall(de,
+        principalRotationFor(s, d), qids, 10, Seq(8, 16))
+        .select(col("dims"), col("query_id"), col("n_exact"),
+          col("recall").as("recall_stale"))
+      val fresh = Similarity.rotatedTruncationRecall(de,
+        driftedRotationFor(s, d), qids, 10, Seq(8, 16))
+        .select(col("dims"), col("query_id"),
+          col("recall").as("recall_refreshed"))
+      stale.join(fresh, Seq("dims", "query_id"))
+        .orderBy(col("dims"), col("query_id"))
+    },
+      Generated(() => truncationDriftOracle)),
   )
-
   /** Build-once PQ code table per corpus (encode once, query many). */
   protected def builtPqCodes(s: SparkSession, d: String): String =
     builtIndexDir("graft_pq", d) { p =>
@@ -673,13 +714,17 @@ private[graft] trait PqEntries extends AnnEntries {
     * static seed-cell assignment + probe CTEs as q_ann_ivf, so the
     * cell-pruned serving path is hash-gated end to end.
     */
-  protected def pqOracle: Seq[(String, String)] = {
-    Option(lastOracleDir).flatMap(d => Option(pqCbCache.get(d))).toSeq.flatMap { cb =>
-      val sd = cb.subDim
-      val values = pqCbValuesSql(cb)
-      // shared encode + ADC tail over a (vec_id, ve) CTE named pv
-      def adc(select: String) =
-        s"""$select,
+  protected def pqOracle(sql: PqAdcSql => String): Oracle = Generated(() =>
+    Option(lastOracleDir).flatMap(d => Option(pqCbCache.get(d)))
+      .map(cb => sql(new PqAdcSql(cb))))
+
+  /** The [[pqOracle]] replays over one codebook. */
+  protected final class PqAdcSql(cb: Similarity.PqCodebook) {
+    private val sd = cb.subDim
+    private val values = pqCbValuesSql(cb)
+    // shared encode + ADC tail over a (vec_id, ve) CTE named pv
+    private def adc(select: String) =
+      s"""$select,
            q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings
                  WHERE vec_id = 0),
            dist AS (SELECT pv.vec_id, c.sub, c.cid,
@@ -702,11 +747,11 @@ private[graft] trait PqEntries extends AnnEntries {
                   GROUP BY 1)
            SELECT vec_id, round(s6 / 1000000.0, 6) AS pq_sim FROM s6t
            ORDER BY pq_sim DESC, vec_id LIMIT 10"""
-      // the IVF-PQ prefix parameterized by an extra corpus predicate:
-      // "" replays the full corpus (build/append/stream twins),
-      // a filter replays the erasure / as-of splits
-      def ivfPv(extra: String) =
-        s"""WITH cb AS (SELECT sub, cid, ce FROM (VALUES $values) t(sub, cid, ce)),
+    // the IVF-PQ prefix parameterized by an extra corpus predicate:
+    // "" replays the full corpus (build/append/stream twins),
+    // a filter replays the erasure / as-of splits
+    private def ivfPv(extra: String) =
+      s"""WITH cb AS (SELECT sub, cid, ce FROM (VALUES $values) t(sub, cid, ce)),
            cc AS (SELECT vec_id AS ccid, CAST(embedding AS DOUBLE[]) AS ce2
                   FROM embeddings WHERE vec_id < 16),
            v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
@@ -722,25 +767,15 @@ private[graft] trait PqEntries extends AnnEntries {
            pv AS (SELECT v.vec_id, v.ve FROM v
                   JOIN assign a ON a.vec_id = v.vec_id
                   WHERE a.cell IN (SELECT ccid FROM probes)$extra)"""
-      Seq(
-        "q_knn_pq" -> adc(
-          s"""WITH cb AS (SELECT sub, cid, ce FROM (VALUES $values) t(sub, cid, ce)),
-           pv AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings)"""),
-        "q_knn_pq_ivf" -> adc(ivfPv("")),
-        // append ≡ rebuild and stream-built ≡ rebuild share the
-        // full-corpus replay verbatim
-        "q_knn_pq_ivf_incremental" -> adc(ivfPv("")),
-        "q_knn_pq_ivf_streamed" -> adc(ivfPv("")),
-        // tombstoned ≡ rebuild-on-remaining; compacted shares it
-        "q_knn_pq_ivf_deleted" -> adc(ivfPv(" AND v.vec_id % 7 <> 3")),
-        "q_knn_pq_ivf_compacted" -> adc(ivfPv(" AND v.vec_id % 7 <> 3")),
-        // as-of "build" on the incremental index: base split only
-        "q_knn_pq_ivf_asof" -> adc(ivfPv(" AND v.vec_id % 8 <> 1")),
-        // two-stage serving: the same probed ADC pipeline SHORTLISTS
-        // 40 ids, then the true float rows of those ids re-rank
-        // exactly — replays shortlist AND re-rank
-        "q_knn_pq_refined" ->
-          s"""${ivfPv("")},
+    def flat: String =
+      adc(
+        s"""WITH cb AS (SELECT sub, cid, ce FROM (VALUES $values) t(sub, cid, ce)),
+           pv AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings)""")
+    // two-stage serving: the same probed ADC pipeline SHORTLISTS
+    // 40 ids, then the true float rows of those ids re-rank
+    // exactly — replays shortlist AND re-rank
+    def refined: String =
+      s"""${ivfPv("")},
            q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings
                  WHERE vec_id = 0),
            dist AS (SELECT pv.vec_id, c.sub, c.cid,
@@ -769,12 +804,12 @@ private[graft] trait PqEntries extends AnnEntries {
            SELECT v2.vec_id,
              round(list_cosine_similarity(v2.ve, q.qe), 4) AS cos_sim
            FROM v v2 JOIN short ON short.vec_id = v2.vec_id CROSS JOIN q
-           ORDER BY cos_sim DESC, v2.vec_id LIMIT 10""",
-        // the fully-served hybrid: the probed ADC shortlist + exact
-        // re-rank branch AND the BM25 branch AND the RRF fusion all
-        // replay — the complete compressed retrieval stack hash-gated
-        "q_hybrid_compressed" ->
-          s"""${ivfPv("")},
+           ORDER BY cos_sim DESC, v2.vec_id LIMIT 10"""
+    // the fully-served hybrid: the probed ADC shortlist + exact
+    // re-rank branch AND the BM25 branch AND the RRF fusion all
+    // replay — the complete compressed retrieval stack hash-gated
+    def hybridCompressed: String =
+      s"""${ivfPv("")},
            q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings
                  WHERE vec_id = 0),
            dist AS (SELECT pv.vec_id, c.sub, c.cid,
@@ -829,8 +864,9 @@ private[graft] trait PqEntries extends AnnEntries {
              round(coalesce(CAST(1 AS DOUBLE) / (60 + lex_rank), 0.0) +
                    coalesce(CAST(1 AS DOUBLE) / (60 + sem_rank), 0.0), 6) AS rrf
            FROM lex FULL OUTER JOIN sem ON lex.doc_id = sem.doc_id
-           ORDER BY rrf DESC, doc_id LIMIT 10""")
-    }
+           ORDER BY rrf DESC, doc_id LIMIT 10"""
+    // the IVF-PQ replay over the corpus predicate `extra`
+    def ivf(extra: String): String = adc(ivfPv(extra))
   }
 
   /** A PQ codebook as DuckDB VALUES rows (sub, cid, double-array
@@ -944,16 +980,20 @@ private[graft] trait PqEntries extends AnnEntries {
              ON a.query_id = e.query_id AND a.vec_id = e.vec_id
            GROUP BY 1, 2"""
 
-  protected def pqRecallOracle: Seq[(String, String)] = {
-    Option(lastOracleDir).flatMap(d => Option(pqCbCache.get(d))).toSeq.flatMap { cb =>
-      val shared = pqRecallSharedSql(cb)
-      def level(np: Int): String = pqRecallLevelSql(np)
-      // the two-stage readout at shortlist depth R: shortlist R by
-      // ADC per query, re-rank those ids by exact cosine, recall of
-      // the re-ranked top-10; `tag` prepends the shortlist column for
-      // the curve variant
-      def refinedLevel(r: Int, tag: Boolean): String =
-        s"""SELECT ${if (tag) s"$r AS shortlist, " else ""}e.query_id,
+  protected def pqRecallOracle(sql: PqRecallSql => String): Oracle = Generated(() =>
+    Option(lastOracleDir).flatMap(d => Option(pqCbCache.get(d)))
+      .map(cb => sql(new PqRecallSql(cb))))
+
+  /** The [[pqRecallOracle]] replays over one codebook. */
+  protected final class PqRecallSql(cb: Similarity.PqCodebook) {
+    private val shared = pqRecallSharedSql(cb)
+    private def level(np: Int): String = pqRecallLevelSql(np)
+    // the two-stage readout at shortlist depth R: shortlist R by
+    // ADC per query, re-rank those ids by exact cosine, recall of
+    // the re-ranked top-10; `tag` prepends the shortlist column for
+    // the curve variant
+    private def refinedLevel(r: Int, tag: Boolean): String =
+      s"""SELECT ${if (tag) s"$r AS shortlist, " else ""}e.query_id,
              count(*) AS n_exact,
              round(count(a.vec_id) * 1.0 / count(*), 4) AS recall
            FROM exact e
@@ -973,32 +1013,31 @@ private[graft] trait PqEntries extends AnnEntries {
                JOIN q ON q.query_id = sh.query_id) WHERE rr <= 10) a
              ON a.query_id = e.query_id AND a.vec_id = e.vec_id
            GROUP BY ${if (tag) "1, 2" else "1"}"""
-      Seq(
-        // the batched serve shares the per-query candidate replay:
-        // batched ≡ Q single-query serves is the hash gate
-        "q_knn_pq_multi" ->
-          s"""$shared
+    // the batched serve shares the per-query candidate replay:
+    // batched ≡ Q single-query serves is the hash gate
+    def multi: String =
+      s"""$shared
              SELECT query_id, vec_id,
                round(s6 / 1000000.0, 6) AS pq_sim FROM (
                SELECT s.query_id, s.vec_id, s.s6,
                  row_number() OVER (PARTITION BY s.query_id
                    ORDER BY round(s.s6 / 1000000.0, 6) DESC, s.vec_id) AS rn
                FROM (${pqRecallCandSql(2)}) s) WHERE rn <= 10
-             ORDER BY query_id, pq_sim DESC, vec_id""",
-        "q_pq_recall" ->
-          s"""$shared
+             ORDER BY query_id, pq_sim DESC, vec_id"""
+    def recall: String =
+      s"""$shared
              SELECT query_id, n_exact, recall FROM (${level(2)})
-             ORDER BY query_id""",
-        "q_pq_recall_curve" ->
-          s"""$shared
+             ORDER BY query_id"""
+    def recallCurve: String =
+      s"""$shared
              SELECT * FROM (
                ${level(1)} UNION ALL ${level(2)}
                UNION ALL ${level(4)} UNION ALL ${level(8)})
-             ORDER BY n_probe, query_id""",
-        // the batched two-stage serve shares the per-query refined
-        // replay: batched ≡ 5 single refined serves is the hash gate
-        "q_knn_pq_refined_multi" ->
-          s"""$shared
+             ORDER BY n_probe, query_id"""
+    // the batched two-stage serve shares the per-query refined
+    // replay: batched ≡ 5 single refined serves is the hash gate
+    def refinedMulti: String =
+      s"""$shared
              SELECT query_id, vec_id, cos_sim FROM (
                SELECT sh.query_id, sh.vec_id,
                  round(list_cosine_similarity(v.ve, q.qe), 4) AS cos_sim,
@@ -1013,18 +1052,17 @@ private[graft] trait PqEntries extends AnnEntries {
                        FROM (${pqRecallCandSql(2)}) s) WHERE rnk <= 40) sh
                JOIN v ON v.vec_id = sh.vec_id
                JOIN q ON q.query_id = sh.query_id) WHERE rr <= 10
-             ORDER BY query_id, cos_sim DESC, vec_id""",
-        "q_pq_refined_recall" ->
-          s"""$shared
+             ORDER BY query_id, cos_sim DESC, vec_id"""
+    def refinedRecall: String =
+      s"""$shared
              SELECT query_id, n_exact, recall FROM (${refinedLevel(40, tag = false)})
-             ORDER BY query_id""",
-        "q_pq_refined_curve" ->
-          s"""$shared
+             ORDER BY query_id"""
+    def refinedCurve: String =
+      s"""$shared
              SELECT * FROM (
                ${refinedLevel(10, tag = true)} UNION ALL ${refinedLevel(20, tag = true)}
                UNION ALL ${refinedLevel(40, tag = true)} UNION ALL ${refinedLevel(80, tag = true)})
-             ORDER BY shortlist, query_id""")
-    }
+             ORDER BY shortlist, query_id"""
   }
 
   /** Oracle for q_truncation_recall_rotated (generated — the
@@ -1032,8 +1070,8 @@ private[graft] trait PqEntries extends AnnEntries {
     * vector and query through the SAME index-order dot folds and
     * re-ranks per prefix against the full-dim exact baseline.
     */
-  protected def rotatedTruncationOracle: Seq[(String, String)] = {
-    Option(lastOracleDir).flatMap(dd => Option(rotationCache.get(dd))).toSeq.map { rot =>
+  protected def rotatedTruncationOracle: Option[String] = {
+    Option(lastOracleDir).flatMap(dd => Option(rotationCache.get(dd))).map { rot =>
       val dim = rot.length
       val vals = rot.zipWithIndex.map { case (r, i) =>
         s"($i, [${r.mkString(",")}]::DOUBLE[])" }.mkString(", ")
@@ -1049,8 +1087,7 @@ private[graft] trait PqEntries extends AnnEntries {
                 FROM pa CROSS JOIN qa) WHERE rn <= 10) a
               ON a.query_id = e.query_id AND a.vec_id = e.vec_id
             GROUP BY 1, 2"""
-      "q_truncation_recall_rotated" ->
-        s"""WITH rot AS (SELECT row, rv FROM (VALUES $vals) t(row, rv)),
+      s"""WITH rot AS (SELECT row, rv FROM (VALUES $vals) t(row, rv)),
            v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
            qv AS (SELECT vec_id AS query_id, ve AS qe FROM v
                   WHERE vec_id IN (0, 1, 2, 3, 4)),
@@ -1081,7 +1118,7 @@ private[graft] trait PqEntries extends AnnEntries {
     * through the same index-order folds, and the two per-prefix
     * rankings join against one exact full-dim baseline.
     */
-  protected def truncationDriftOracle: Seq[(String, String)] = {
+  protected def truncationDriftOracle: Option[String] = {
     (for {
       dd <- Option(lastOracleDir)
       rotS <- Option(rotationCache.get(dd))
@@ -1112,8 +1149,7 @@ private[graft] trait PqEntries extends AnnEntries {
                 FROM pa$tag pa CROSS JOIN qa$tag qa) WHERE rn <= 10) a
               ON a.query_id = e.query_id AND a.vec_id = e.vec_id
             GROUP BY 1, 2"""
-      "q_truncation_drift" ->
-        s"""WITH rots AS (SELECT row, rv FROM (VALUES ${rotVals(rotS)}) t(row, rv)),
+      s"""WITH rots AS (SELECT row, rv FROM (VALUES ${rotVals(rotS)}) t(row, rv)),
            rotf AS (SELECT row, rv FROM (VALUES ${rotVals(rotF)}) t(row, rv)),
            base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve
                     FROM embeddings),
@@ -1139,17 +1175,16 @@ private[graft] trait PqEntries extends AnnEntries {
            JOIN (${lvl("f", 8)} UNION ALL ${lvl("f", 16)}) fr
              USING (dims, query_id)
            ORDER BY dims, query_id"""
-    }).toSeq
+    })
   }
 
   /** Oracle for q_pq_recall_wide — the ksub=256 book through the SAME
     * shared replay text as q_pq_recall (one SQL shape, two operating
     * points).
     */
-  protected def pqWideRecallOracle: Seq[(String, String)] = {
-    Option(lastOracleDir).flatMap(d => Option(pqWideCbCache.get(d))).toSeq.map { cb =>
-      "q_pq_recall_wide" ->
-        s"""${pqRecallSharedSql(cb)}
+  protected def pqWideRecallOracle: Option[String] = {
+    Option(lastOracleDir).flatMap(d => Option(pqWideCbCache.get(d))).map { cb =>
+      s"""${pqRecallSharedSql(cb)}
            SELECT query_id, n_exact, recall FROM (${pqRecallLevelSql(2)})
            ORDER BY query_id"""
     }
@@ -1163,15 +1198,19 @@ private[graft] trait PqEntries extends AnnEntries {
     * decomposes exactly, so the residual serving path is hash-gated
     * end to end, including the no-gain-on-this-corpus recall numbers.
     */
-  protected def residualPqOracles: Seq[(String, String)] = {
-    Option(lastOracleDir).flatMap(d => Option(pqResidualCbCache.get(d))).toSeq.flatMap { cb =>
-      val sd = cb.subDim
-      val dim = cb.m * sd
-      val values = pqCbValuesSql(cb)
-      // the residual frame + encode + per-query LUTs, shared by both
-      // readouts (single-query topk restricts q to vec 0)
-      def shared(qids: String) =
-        s"""WITH cb AS (SELECT sub, cid, ce FROM (VALUES $values) t(sub, cid, ce)),
+  protected def residualPqOracle(sql: ResidualPqSql => String): Oracle = Generated(() =>
+    Option(lastOracleDir).flatMap(d => Option(pqResidualCbCache.get(d)))
+      .map(cb => sql(new ResidualPqSql(cb))))
+
+  /** The [[residualPqOracle]] replays over one residual codebook. */
+  protected final class ResidualPqSql(cb: Similarity.PqCodebook) {
+    private val sd = cb.subDim
+    private val dim = cb.m * sd
+    private val values = pqCbValuesSql(cb)
+    // the residual frame + encode + per-query LUTs, shared by both
+    // readouts (single-query topk restricts q to vec 0)
+    private def shared(qids: String) =
+      s"""WITH cb AS (SELECT sub, cid, ce FROM (VALUES $values) t(sub, cid, ce)),
            cc AS (SELECT vec_id AS ccid, CAST(embedding AS DOUBLE[]) AS ce2
                   FROM embeddings WHERE vec_id < 16),
            v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
@@ -1219,13 +1258,12 @@ private[graft] trait PqEntries extends AnnEntries {
              JOIN (SELECT query_id, cell FROM pr WHERE rn <= 2) p
                ON p.query_id = s.query_id AND p.cell = a.cell
              JOIN ct ON ct.query_id = s.query_id AND ct.ccid = a.cell)"""
-      Seq(
-        "q_knn_pq_residual" ->
-          s"""${shared("0")}
+    def knn: String =
+      s"""${shared("0")}
              SELECT vec_id, round(s6 / 1000000.0, 6) AS pq_sim FROM cand
-             ORDER BY pq_sim DESC, vec_id LIMIT 10""",
-        "q_pq_residual_recall" ->
-          s"""${shared("0, 1, 2, 3, 4")},
+             ORDER BY pq_sim DESC, vec_id LIMIT 10"""
+    def recall: String =
+      s"""${shared("0, 1, 2, 3, 4")},
              exact AS (SELECT query_id, vec_id FROM (
                  SELECT q.query_id, v.vec_id,
                    row_number() OVER (PARTITION BY q.query_id
@@ -1242,22 +1280,22 @@ private[graft] trait PqEntries extends AnnEntries {
                      ORDER BY round(s6 / 1000000.0, 6) DESC, vec_id) AS rnk
                  FROM cand) WHERE rnk <= 10) a
                ON a.query_id = e.query_id AND a.vec_id = e.vec_id
-             GROUP BY 1 ORDER BY 1""",
-        // the batched residual serve shares the per-query candidate
-        // replay: batched ≡ 5 single serves is the hash gate
-        "q_knn_pq_residual_multi" ->
-          s"""${shared("0, 1, 2, 3, 4")}
+             GROUP BY 1 ORDER BY 1"""
+    // the batched residual serve shares the per-query candidate
+    // replay: batched ≡ 5 single serves is the hash gate
+    def multi: String =
+      s"""${shared("0, 1, 2, 3, 4")}
              SELECT query_id, vec_id,
                round(s6 / 1000000.0, 6) AS pq_sim FROM (
                SELECT query_id, vec_id, s6,
                  row_number() OVER (PARTITION BY query_id
                    ORDER BY round(s6 / 1000000.0, 6) DESC, vec_id) AS rn
                FROM cand) WHERE rn <= 10
-             ORDER BY query_id, pq_sim DESC, vec_id""",
-        // the residual two-stage: the SAME residual-ADC candidates
-        // shortlist 40, the true float rows of those ids re-rank
-        "q_knn_pq_residual_refined" ->
-          s"""${shared("0")},
+             ORDER BY query_id, pq_sim DESC, vec_id"""
+    // the residual two-stage: the SAME residual-ADC candidates
+    // shortlist 40, the true float rows of those ids re-rank
+    def refined: String =
+      s"""${shared("0")},
              short AS (SELECT vec_id FROM (
                  SELECT vec_id,
                    row_number() OVER (
@@ -1266,9 +1304,9 @@ private[graft] trait PqEntries extends AnnEntries {
              SELECT v2.vec_id,
                round(list_cosine_similarity(v2.ve, q.qe), 4) AS cos_sim
              FROM v v2 JOIN short ON short.vec_id = v2.vec_id CROSS JOIN q
-             ORDER BY cos_sim DESC, v2.vec_id LIMIT 10""",
-        "q_pq_residual_refined_recall" ->
-          s"""${shared("0, 1, 2, 3, 4")},
+             ORDER BY cos_sim DESC, v2.vec_id LIMIT 10"""
+    def refinedRecall: String =
+      s"""${shared("0, 1, 2, 3, 4")},
              short AS (SELECT query_id, vec_id FROM (
                  SELECT query_id, vec_id,
                    row_number() OVER (PARTITION BY query_id
@@ -1294,8 +1332,7 @@ private[graft] trait PqEntries extends AnnEntries {
                      ORDER BY cos_sim DESC, vec_id) AS rr2
                  FROM rr) WHERE rr2 <= 10) a
                ON a.query_id = e.query_id AND a.vec_id = e.vec_id
-             GROUP BY 1 ORDER BY 1""")
-    }
+             GROUP BY 1 ORDER BY 1"""
   }
 
   /** Oracle for q_pq_recluster_recall (generated — needs the drifted
@@ -1306,7 +1343,7 @@ private[graft] trait PqEntries extends AnnEntries {
     * against the shared exact float baseline, so the drop→recovery
     * recalls are each hash-gated numbers.
     */
-  protected def pqReclusterRecallOracle: Option[(String, String)] = {
+  protected def pqReclusterRecallOracle: Option[String] = {
     for {
       d <- Option(lastOracleDir)
       cbStale <- Option(pqCbCache.get(d))
@@ -1350,8 +1387,7 @@ private[graft] trait PqEntries extends AnnEntries {
                  row_number() OVER (PARTITION BY query_id
                    ORDER BY round(s6 / 1000000.0, 6) DESC, vec_id) AS rn
                FROM s6$tag) WHERE rn <= 10)"""
-      "q_pq_recluster_recall" ->
-        s"""WITH cbs AS (SELECT sub, cid, ce FROM (VALUES $vs) t(sub, cid, ce)),
+      s"""WITH cbs AS (SELECT sub, cid, ce FROM (VALUES $vs) t(sub, cid, ce)),
            cbf AS (SELECT sub, cid, ce FROM (VALUES $vf) t(sub, cid, ce)),
            base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve
                     FROM embeddings),

@@ -13,19 +13,21 @@ import graft.quality.RuleBasedScorer
 import graft.similarity.Similarity
 import graft.textanalysis.TextAnalysis
 
+import EntryInfra._
+
 /** Text analysis, BPE, LM/NB/DSIR gates, memorization, admission — one module of the per-family SparkEntry split (round 14):
-  * this family's `queries` entries and their static oracle SQL, plus
-  * (after the helper migration) the builders and generated oracles
-  * only this family uses. Aggregated by [[SparkEntry]].
+  * this family's `Seq[Query]`, each query declared once beside its
+  * oracle decision, plus the builders and generated oracles only
+  * this family uses. Aggregated by [[SparkEntry]].
   */
 private[graft] trait TextEntries extends EntryInfra {
 
-  protected def textQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected def textQueries: Seq[Query] = Seq(
     // Training-data prep: PII stripped from flagged docs (narrow).
     // The synthetic corpus carries no PII, so identifiers are planted
     // deterministically (same construction in the oracle) — the
     // redaction spans, not just the match booleans, go through the gate
-    "q_redact_pii" -> ((s, d) => {
+    Query("q_redact_pii", (s, d) => {
       import graft.functions.TextFunctions.{hasPii, redactPii}
       val planted = Tables.documents(s, d).withColumn("text2",
         when(col("doc_id") % 7 === 0,
@@ -37,421 +39,8 @@ private[graft] trait TextEntries extends EntryInfra {
       planted.filter(hasPii(col("text2")))
         .select(col("doc_id"), redactPii(col("text2")).as("redacted"))
         .orderBy(col("doc_id"))
-    }),
-    // Training prep: overlapping sliding-window chunking (32-word
-    // windows, stride 24) — the RAG/context-window splitter; fully
-    // narrow (zero exchanges), presentation sort at the edge
-    "q_chunk_docs" -> ((s, d) =>
-      graft.textanalysis.TextAnalysis.chunkDocuments(
-        Tables.documents(s, d), chunkWords = 32, strideWords = 24)
-        .orderBy(col("doc_id"), col("chunk_idx"))),
-    // Text analysis: per-doc token counts, ratios, language ID
-    "q_text_stats" -> ((s, d) => TextAnalysis.textStats(Tables.documents(s, d))),
-    // Text analysis: per-language corpus rollup
-    "q_corpus_stats" -> ((s, d) => TextAnalysis.corpusStats(Tables.documents(s, d))),
-    // Text analysis: rolling-hash + md5 document fingerprints
-    "q_fingerprints" -> ((s, d) => TextAnalysis.fingerprints(Tables.documents(s, d))),
-    // Quality: Gopher-style repetition filters (dup-word/n-gram
-    // fractions + top-bigram share; narrow per-doc array math)
-    "q_repetition" -> ((s, d) =>
-      TextAnalysis.repetitionStats(Tables.documents(s, d))),
-    // Quality: per-doc token-distribution Shannon entropy (nats) —
-    // the templated-garbage detector; zero-shuffle narrow fold in
-    // exact integer micro-nats (plan + exactness spec'd)
-    "q_token_entropy" -> ((s, d) =>
-      TextAnalysis.tokenEntropy(Tables.documents(s, d))),
-    // Quality: zlib compressibility (deflated/raw bytes) — catches
-    // long-range template repeats entropy and n-gram stats miss.
-    // Engine-specific codec → rows-only (exactness spec'd against
-    // java.util.zip; the documented sketch-family pattern)
-    "q_compression_ratio" -> ((s, d) =>
-      TextAnalysis.compressionRatio(Tables.documents(s, d))),
-    // Decontamination: benchmark bigram overlap (benchmark = the
-    // doc_id % 101 == 7 slice, broadcast; corpus = the rest)
-    "q_decontaminate" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.contaminationStats(
-        docs.filter(col("doc_id") % 101 =!= 7),
-        docs.filter(col("doc_id") % 101 === 7),
-        "doc_id", "text")
-    }),
-    // The inverse contamination report: per BENCHMARK doc, how many
-    // corpus docs share its bigrams and what fraction of its grams
-    // leaked — the eval owner's "which test items are compromised"
-    "q_contamination_by_bench" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.contaminationByBenchmark(
-        docs.filter(col("doc_id") % 101 =!= 7),
-        docs.filter(col("doc_id") % 101 === 7),
-        "doc_id", "text")
-    }),
-    // Span-level decontamination: every 8-word span shared with the
-    // held-out slice is cut out of the corpus doc, rest kept
-    "q_decontaminate_spans" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Dedup.spanDecontaminate(
-        docs.filter(col("doc_id") % 101 =!= 7),
-        docs.filter(col("doc_id") % 101 === 7),
-        "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-    // Tokenizer training: the first 8 BPE merges learned from the
-    // corpus word-frequency table (Sennrich get_stats/merge loop;
-    // one corpus shuffle, then vocabulary-sized rounds)
-    "q_bpe_merges" -> ((s, d) =>
-      withAqeOff(s) {
-        graft.textanalysis.TextAnalysis.bpeMerges(Tables.documents(s, d), 8)
-          .orderBy(col("rank"))
-      }),
-    // Tokenizer serving: learn the merge table, then tokenize the
-    // corpus with it (bounded driver-side merge literal → one narrow
-    // codegen'd replace chain; the half that runs at 100 TB)
-    "q_bpe_encode" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val merges = graft.textanalysis.TextAnalysis.bpeMerges(docs, 8)
-        .orderBy(col("rank")).collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      graft.textanalysis.TextAnalysis.bpeEncode(docs, merges)
-        .orderBy(col("doc_id"))
-    }),
-    // Tokenizer serving PAST the 64-merge literal cap: the FULL
-    // learned merge table (this corpus exhausts at ~106 merges —
-    // past the literal-chain bound; real tokenizers ship 32k+)
-    // through the vocab-join design — merges tokenize the word
-    // VOCABULARY once (chunked ≤64-replace codegen units), the
-    // corpus tokenizes by explode + join on word: O(corpus), one
-    // bounded join, no per-merge pass over the data. Vocab table and
-    // merge table are build-once session artifacts (the PQ-codebook
-    // lifecycle).
-    "q_bpe_encode_vocab" -> ((s, d) =>
-      graft.textanalysis.TextAnalysis.bpeEncodeWithVocab(
-        Tables.documents(s, d), bpeVocabTable(s, d))
-        .orderBy(col("doc_id"))),
-    // The same tokenization served from the WRITTEN artifact (the
-    // writeIvfIndex lifecycle): the vocab-token table reads back
-    // from parquet and the corpus joins it — cross-session serving,
-    // gated by the same direct-replay oracle
-    "q_bpe_encode_indexed" -> ((s, d) =>
-      graft.textanalysis.TextAnalysis.bpeEncodeFromVocabIndex(
-        Tables.documents(s, d), builtVocabTokens(s, d))
-        .orderBy(col("doc_id"))),
-    // Tokenizer fitness on held-out text: the vocab table built from
-    // the ¾ split serves the ¼ — per-language OOV rate + fertility
-    // (the report a tokenizer owner reads before shipping; exact
-    // //-division readouts, generated merge-replay oracle)
-    "q_bpe_coverage" -> ((s, d) => {
-      lastOracleDir = d
-      val docs = Tables.documents(s, d)
-      TextAnalysis.bpeCoverage(docs.filter(col("doc_id") % 4 === 0),
-        bpeTrainVocabTable(s, d))
-    }),
-    // Serving the trained vocab against FRESH text with the real-
-    // tokenizer OOV contract: held-out words absent from the
-    // train-split vocabulary fall back to their character stream +
-    // end-of-word marker (the zero-merges base encoding) instead of
-    // dropping — a shipped tokenizer never loses input
-    "q_bpe_encode_fallback" -> ((s, d) => {
-      lastOracleDir = d
-      graft.textanalysis.TextAnalysis.bpeEncodeWithVocabFallback(
-        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
-        bpeTrainVocabTable(s, d))
-        .orderBy(col("doc_id"))
-    }),
-    // The training-data last mile end-to-end: tokenize the held-out
-    // quarter with the TRAINED byte-fallback tokenizer, then pack the
-    // real token counts into 512-token blocks (the q_pack_sequences
-    // strategy over actual tokenizer output, not whitespace proxies)
-    "q_pack_bpe" -> ((s, d) => {
-      lastOracleDir = d
-      val enc = graft.textanalysis.TextAnalysis.bpeEncodeWithVocabFallback(
-        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
-        bpeTrainVocabTable(s, d))
-        .select(col("doc_id"), col("n_tokens").as("bpe_tokens"))
-      graft.textanalysis.TextAnalysis.packSequences(
-        enc, "doc_id", col("bpe_tokens"), budget = 512, nShards = 8)
-        .groupBy(col("shard"), col("block"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
-        .orderBy(col("shard"), col("block"))
-    }),
-    // Vocabulary heavy hitters: exact corpus top-20 bigrams
-    "q_top_ngrams" -> ((s, d) =>
-      TextAnalysis.topNgrams(Tables.documents(s, d), 2, 20)),
-    // Memorization risk (Lee et al. '22): per-doc fraction of 5-gram
-    // occurrences that also appear in at least one OTHER document —
-    // cross-doc duplicated text the model will see repeatedly
-    "q_memorization" -> ((s, d) =>
-      TextAnalysis.memorizationStats(Tables.documents(s, d), 5)),
-    // ...and the top-20 most duplicated 5-grams behind that fraction
-    "q_memorized_grams" -> ((s, d) =>
-      TextAnalysis.memorizedTopGrams(Tables.documents(s, d), 5, 20)),
-    // Ingest-time admission gate: how much of each held-out doc is
-    // text the train-quarter index has already seen (frozen gram
-    // index probed per batch — never rebuilt)
-    "q_memorization_probe" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.memorizationProbe(
-        docs.filter(col("doc_id") % 4 === 0),
-        TextAnalysis.memorizationIndex(
-          docs.filter(col("doc_id") % 4 =!= 0), 5),
-        5, minDocs = 1L)
-    }),
-    // Mergeable-index refresh: (train index) ⊎ (held-out batch index)
-    // probed at the cross-doc threshold ≡ full-corpus retrain — the
-    // additivity is gated by the full q_memorization replay itself
-    "q_memorization_incremental" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val merged = TextAnalysis.mergeMemorizationIndexes(
-        TextAnalysis.memorizationIndex(
-          docs.filter(col("doc_id") % 4 =!= 0), 5),
-        TextAnalysis.memorizationIndex(
-          docs.filter(col("doc_id") % 4 === 0), 5))
-      TextAnalysis.memorizationProbe(
-        docs.filter(col("doc_id") % 4 === 0), merged, 5, minDocs = 2L)
-    }),
-    // The STAGED serving twins (round-10 verdict #5): per-(doc, gram)
-    // counts staged once as a g-bucketed catalog table, the frozen
-    // gram index bucketed to match — the probe's corpus-wide gram
-    // join plans ZERO exchanges and the query never re-tokenizes.
-    // Each twin shares its one-shot query's oracle SQL verbatim, so
-    // staged ≡ one-shot is gated by the hash itself
-    "q_memorization_indexed" -> ((s, d) =>
-      TextAnalysis.memorizationProbeStaged(
-        Tables.documents(s, d).select(col("doc_id")),
-        builtMemGramsTable(s, d), builtMemIndexTable(s, d), minDocs = 2L)),
-    "q_memorization_probe_indexed" -> ((s, d) =>
-      TextAnalysis.memorizationProbeStaged(
-        Tables.documents(s, d).filter(col("doc_id") % 4 === 0)
-          .select(col("doc_id")),
-        builtMemGramsTable(s, d), builtMemTrainIndexTable(s, d),
-        minDocs = 1L, docFilter = Some(col("doc_id") % 4 === 0))),
-    "q_memorization_incremental_indexed" -> ((s, d) =>
-      TextAnalysis.memorizationProbeStaged(
-        Tables.documents(s, d).filter(col("doc_id") % 4 === 0)
-          .select(col("doc_id")),
-        builtMemGramsTable(s, d), builtMemIndexTable(s, d),
-        minDocs = 2L, docFilter = Some(col("doc_id") % 4 === 0))),
-    // ERASURE for the mergeable gram index: the train docs ≡ 1 mod 8
-    // erased by appending their own NEGATED counts (O(batch); the
-    // written rows never read), served through the consolidating
-    // reader — the oracle replays the admission gate against the
-    // REMAINING train set, so merged-after-delete ≡ retrain is the
-    // hash gate itself
-    "q_memorization_probe_deleted" -> ((s, d) =>
-      TextAnalysis.memorizationProbe(
-        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
-        TextAnalysis.readMemorizationIndexMerged(s,
-          builtMemDelIndexDir(s, d)),
-        5, minDocs = 1L)),
-    // STREAMING ERASURE for the gram index: the same batch forgotten
-    // through two checkpointed deletion-request micro-batches
-    // (memorizationDeleteSink — negated mergeable counts, O(batch));
-    // the consolidated probe shares the batch-deleted oracle, so
-    // sink-erased ≡ retrain-on-remaining is the hash gate itself
-    "q_memorization_probe_stream_deleted" -> ((s, d) =>
-      TextAnalysis.memorizationProbe(
-        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
-        TextAnalysis.readMemorizationIndexMerged(s,
-          builtMemStrDelIndexDir(s, d) + "/idx"),
-        5, minDocs = 1L)),
-    // ...and the same probe after COMPACTION makes the erasure
-    // physical (base rows rewritten consolidated, _deletes dropped)
-    // — served through the PLAIN reader, no per-read aggregation;
-    // compacted ≡ tombstoned gated by sharing the deleted oracle
-    "q_memorization_probe_compacted" -> ((s, d) =>
-      TextAnalysis.memorizationProbe(
-        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
-        TextAnalysis.readMemorizationIndex(s, builtMemCmpIndexDir(s, d)),
-        5, minDocs = 1L)),
-    // RETENTION for the gram index: two append windows + an erasure,
-    // then compactMemorizationIndexKeeping folds w1 + the erasure
-    // into the base while w2 stays addressable. Serving is invariant
-    // (shares the batch-deleted oracle — the merged membership is
-    // identical); negative folded sums survive by design, so a
-    // folded delete keeps correcting a kept append
-    "q_memorization_probe_retained" -> ((s, d) =>
-      TextAnalysis.memorizationProbe(
-        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
-        TextAnalysis.readMemorizationIndexMerged(s,
-          builtMemRetIndexDir(s, d)),
-        5, minDocs = 1L)),
-    // ...and the fold itself, hash-gated: as-of("build") AFTER
-    // retention = base ∪ folded-w1 − folded-erasure (train minus the
-    // kept ≡7 window minus the erased ≡1 batch)
-    "q_memorization_probe_retained_asof" -> ((s, d) =>
-      TextAnalysis.memorizationProbe(
-        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
-        TextAnalysis.readMemorizationIndexAsOf(s,
-          builtMemRetIndexDir(s, d), Seq("build")),
-        5, minDocs = 1L)),
-    // WRITTEN-APPEND ingestion for the gram index: base (train minus
-    // the ≡5 mod 8 eighth) + that eighth appended under its own
-    // batch partition — O(batch tokenize), base never read; the
-    // consolidated serve shares the FULL-train probe oracle, so
-    // append ≡ retrain-on-union is the hash gate itself
-    "q_memorization_probe_appended" -> ((s, d) =>
-      TextAnalysis.memorizationProbe(
-        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
-        TextAnalysis.readMemorizationIndexMerged(s,
-          builtMemAppIndexDir(s, d)),
-        5, minDocs = 1L)),
-    // STREAMING ingestion for the gram index (round-11 verdict #5):
-    // the same eighth arrives as two checkpointed micro-batches
-    // through memorizationIndexSink — mergeable counts make the sink
-    // append-only partitions, and the consolidated probe shares the
-    // FULL-train oracle, so stream-built ≡ retrain is the hash gate
-    "q_memorization_probe_streamed" -> ((s, d) =>
-      TextAnalysis.memorizationProbe(
-        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
-        TextAnalysis.readMemorizationIndexMerged(s,
-          builtMemStrIndexDir(s, d) + "/idx"),
-        5, minDocs = 1L)),
-    // SNAPSHOT of the same appended index as of its BASE batch only
-    // (partition-pruned consolidation) — the probe must behave as if
-    // the append never happened; the oracle replays the gate against
-    // the base split alone
-    "q_memorization_probe_asof" -> ((s, d) =>
-      TextAnalysis.memorizationProbe(
-        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
-        TextAnalysis.readMemorizationIndexAsOf(s,
-          builtMemAppIndexDir(s, d), Seq("build")),
-        5, minDocs = 1L)),
-    // Mixture analytics: per-source unigram KL from the corpus blend
-    "q_domain_divergence" -> ((s, d) =>
-      TextAnalysis.domainDivergence(Tables.documents(s, d))),
-    // Per-doc top-3 tf·idf keywords (BM25's ln-rounding contract)
-    "q_tfidf_keywords" -> ((s, d) =>
-      TextAnalysis.tfidfKeywords(Tables.documents(s, d), 3)),
-    // CCNet-style corpus-trained bigram-LM quality score
-    "q_lm_score" -> ((s, d) =>
-      TextAnalysis.lmScore(Tables.documents(s, d))),
-    // DSIR importance weights: hashed uni+bigram models of the
-    // English slice (target) vs the whole pool (raw); per-doc
-    // log-weight as an exact micro-nat sum (zero-shuffle scoring
-    // pass against the 1024-bucket literal ratio table)
-    "q_dsir_weights" -> ((s, d) =>
-      graft.selection.Dsir.dsirScore(Tables.documents(s, d),
-        dsirModelFor(s, d))
-        .orderBy(col("doc_id"))),
-    // DSIR selection: Gumbel top-50 of the importance weights —
-    // deterministic weighted sampling without replacement (noise
-    // from md5(doc_id), the repo's seedless-sampling convention)
-    "q_dsir_select" -> ((s, d) =>
-      graft.selection.Dsir.dsirSelect(Tables.documents(s, d),
-        dsirModelFor(s, d), 50)
-        .orderBy(col("doc_id"))),
-    // Incremental model refresh: counts are the MERGEABLE form of
-    // the DSIR model (log-ratios aren't — ln doesn't distribute), so
-    // base-corpus counts + a new batch's counts rebuild the ratio
-    // table EXACTLY as a full retrain would (count additivity) —
-    // which is why the full-corpus oracle gates the merged model
-    "q_dsir_incremental" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      // base + batch counts from ONE tokenization pass (round-16):
-      // grouped by (bucket, split) the integer counts are exactly the
-      // two dsirCountsOf calls this replaced, and the merge → ratio
-      // path (what the query demonstrates) is unchanged
-      val (base, inc) = graft.selection.Dsir.dsirCountsSplit(docs,
-        col("doc_id") % 3 =!= 0, col("lang") === "en", 1024)
-      graft.selection.Dsir.dsirScore(docs, base.merge(inc).toModel)
-        .orderBy(col("doc_id"))
-    }),
-    // Same weights served from the WRITTEN parquet model — the
-    // artifact lifecycle (train → write → read → score) under the
-    // same oracle as the in-session path
-    "q_dsir_weights_indexed" -> ((s, d) =>
-      graft.selection.Dsir.dsirScore(Tables.documents(s, d),
-        graft.selection.Dsir.readDsirModel(s, builtDsirModel(s, d)))
-        .orderBy(col("doc_id"))),
-    // Learned quality classifier (fastText-style linear model,
-    // closed-form Naive Bayes train): hashed uni+bigram weights
-    // trained on the ¾ split to separate substantial (n_chars ≥ 300)
-    // docs from short ones — the TRAINING itself replays
-    // relationally: every weight and the prior bias hash-match the
-    // DuckDB count-and-ln replay
-    "q_quality_classifier" -> ((s, d) =>
-      graft.quality.NbClassifier.modelFrame(s, nbModelFor(s, d))
-        .orderBy(col("b"))),
-    // The learned gate applied to the HELD-OUT quarter (the
-    // lm_score_frozen serving split): exact micro-nat decision scores
-    // + the MAP keep bit, zero-shuffle against the weight literal
-    "q_quality_classifier_gate" -> ((s, d) =>
-      graft.quality.NbClassifier.nbScore(
-        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
-        nbModelFor(s, d))
-        .orderBy(col("doc_id"))),
-    // Same gate served from the WRITTEN parquet classifier — the
-    // artifact lifecycle (train → write → read → score) under the
-    // same oracle as the in-session path
-    "q_quality_classifier_indexed" -> ((s, d) =>
-      graft.quality.NbClassifier.nbScore(
-        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
-        graft.quality.NbClassifier.readNbModel(s, builtNbModel(s, d)))
-        .orderBy(col("doc_id"))),
-    // Calibration readout: precision/recall of the learned gate on
-    // the held-out quarter at ±2-nat thresholds — exact integer
-    // counts, exact long-division 4-decimal ratios
-    "q_classifier_pr" -> ((s, d) =>
-      graft.quality.NbClassifier.prCurve(
-        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
-        nbModelFor(s, d), col("n_chars") >= 300,
-        Seq(-2000000L, -1000000L, 0L, 1000000L, 2000000L))),
-    // Per-language tokenizer fertility: BPE-ish tokens per word over
-    // exact long sums — the token-denominated mixture readout
-    "q_token_fertility" -> ((s, d) =>
-      TextAnalysis.tokenFertility(Tables.documents(s, d))),
-    // FUSED ingest admission: the held-out quarter streamed through
-    // admissionSink — three frozen artifacts (¾-trained bigram LM,
-    // NB classifier, DSIR ratios) gate each micro-batch as ONE
-    // decision over ONE shared tokenization; survivors carry their
-    // scores as the audit trail. The static oracle replays all three
-    // trainings AND the composed decision, so stream ≡ batch-
-    // composition is the hash gate itself
-    "q_admission_pipeline" -> ((s, d) =>
-      s.read.parquet(builtAdmissionOut(s, d) + "/out")
-        .select(col("doc_id"), col("lm_nll"), col("nb_d6"),
-          col("dsir_logw"))
-        .orderBy(col("doc_id"))),
-    // RETENTION on the gate sink's admitted-output table (the third
-    // catalog family under the query gate): micro-batch 0 folded to
-    // the collapse partition, batch 1 kept — the full admitted set is
-    // invariant, gated by sharing q_admission_pipeline's oracle
-    "q_admission_retained" -> ((s, d) =>
-      s.read.parquet(builtAdmissionRetainedOut(s, d) + "/out")
-        .select(col("doc_id"), col("lm_nll"), col("nb_d6"),
-          col("dsir_logw"))
-        .orderBy(col("doc_id"))),
-    // The COMPLETE admission: the three row-local gates PLUS the
-    // join-shaped memorization gate against the frozen ¾-train gram
-    // index, one decision per micro-batch over one materialized
-    // tokenize pass. The static oracle replays all FOUR artifact
-    // derivations and the composed decision
-    "q_admission_pipeline_full" -> ((s, d) =>
-      s.read.parquet(builtFullAdmissionOut(s, d) + "/out")
-        .select(col("doc_id"), col("lm_nll"), col("nb_d6"),
-          col("dsir_logw"), col("dup_frac"))
-        .orderBy(col("doc_id"))),
-    // Frozen-LM serving split: model trained on the ¾ corpus slice,
-    // scores the held-out ¼ — unseen grams smooth through add-1
-    "q_lm_score_frozen" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.lmScoreWith(
-        TextAnalysis.lmTrain(docs.filter(col("doc_id") % 4 =!= 0)),
-        docs.filter(col("doc_id") % 4 === 0), nllThreshold = 10.0)
-    }),
-    // Canonical normalization over planted case/punct/whitespace noise
-    "q_normalize_text" -> ((s, d) =>
-      Tables.documents(s, d)
-        .withColumn("messy",
-          when(col("doc_id") % 2 === 0, concat(upper(col("text")), lit("!! ")))
-            .otherwise(concat(lit("  "), col("text"), lit(" ,. "))))
-        .select(col("doc_id"),
-          TextFunctions.normalizeText(col("messy")).as("normalized"))
-        .orderBy(col("doc_id"))),
-  )
-
-  protected def textStaticOracles: Map[String, String] = Map(
-    "q_redact_pii" ->
-      """WITH p AS (
+    },
+      Sql("""WITH p AS (
            SELECT doc_id,
              CASE WHEN doc_id % 7 = 0
                     THEN text || ' mail user' || CAST(doc_id AS VARCHAR) || '@example.com'
@@ -470,9 +59,15 @@ private[graft] trait TextEntries extends EntryInfra {
          WHERE regexp_matches(text2, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')
             OR regexp_matches(text2, '[0-9]{3}-[0-9]{2}-[0-9]{4}')
             OR regexp_matches(text2, '\+?[0-9][0-9 ()-]{7,14}[0-9]')
-         ORDER BY doc_id""",
-    "q_chunk_docs" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+         ORDER BY doc_id""")),
+    // Training prep: overlapping sliding-window chunking (32-word
+    // windows, stride 24) — the RAG/context-window splitter; fully
+    // narrow (zero exchanges), presentation sort at the edge
+    Query("q_chunk_docs", (s, d) =>
+      graft.textanalysis.TextAnalysis.chunkDocuments(
+        Tables.documents(s, d), chunkWords = 32, strideWords = 24)
+        .orderBy(col("doc_id"), col("chunk_idx")),
+      Sql("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          k AS (SELECT doc_id, ws, len(ws) AS n,
                  CASE WHEN len(ws) <= 32 THEN 1
                       ELSE 1 + (len(ws) - 32 + 23) // 24 END AS nk
@@ -481,9 +76,10 @@ private[graft] trait TextEntries extends EntryInfra {
          SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
            array_to_string(list_slice(ws, i*24 + 1, i*24 + 32), ' ') AS chunk_text,
            CAST(least(32, n - i*24) AS BIGINT) AS n_words
-         FROM s ORDER BY doc_id, chunk_idx""",
-    "q_text_stats" ->
-      """WITH w AS (
+         FROM s ORDER BY doc_id, chunk_idx""")),
+    // Text analysis: per-doc token counts, ratios, language ID
+    Query("q_text_stats", (s, d) => TextAnalysis.textStats(Tables.documents(s, d)),
+      Sql("""WITH w AS (
            SELECT doc_id, text, string_split(text, ' ') AS ws FROM documents),
          sc AS (
            SELECT doc_id, text, ws,
@@ -503,36 +99,28 @@ private[graft] trait TextEntries extends EntryInfra {
                 WHEN s_es > 0 AND s_es = greatest(s_en,s_fr,s_es,s_de) THEN 'es'
                 WHEN s_de > 0 AND s_de = greatest(s_en,s_fr,s_es,s_de) THEN 'de'
                 ELSE 'und' END AS detected_lang
-         FROM sc ORDER BY doc_id""",
-    // repetition metrics replay in DuckDB via list comprehensions:
-    // range(1, len) yields bigram start indices, list_distinct gives
-    // the dup fractions, and the top-bigram count is the max of each
-    // bigram's own multiplicity (O(n²) is fine at oracle scale; the
-    // Spark side uses an O(n log n) sort + run-length fold — only the
-    // COUNT must agree, not the algorithm)
-    // relational replay of the narrow fold: group-count the tokens,
-    // rebuild Σ c·round(ln(n/c)·1e6) — exact integer terms make the
-    // summation order irrelevant, so shapes can differ across engines
-    "q_token_entropy" ->
-      """WITH wc AS (
-           SELECT doc_id, w, count(*) AS c FROM (
-             SELECT doc_id, unnest(string_split(text, ' ')) AS w
-             FROM documents)
-           GROUP BY doc_id, w),
-         d AS (
-           SELECT doc_id, CAST(sum(c) AS BIGINT) AS n,
-                  CAST(count(*) AS BIGINT) AS n_types, list(c) AS cs
-           FROM wc GROUP BY doc_id)
-         SELECT doc_id, n AS n_words, n_types,
-           round(CAST(list_sum(list_transform(cs,
-               c -> c * CAST(round(ln(n / c) * 1e6) AS BIGINT)))
-             AS BIGINT) / (n * 1e6), 4) AS entropy,
-           n >= 20 AND round(CAST(list_sum(list_transform(cs,
-               c -> c * CAST(round(ln(n / c) * 1e6) AS BIGINT)))
-             AS BIGINT) / (n * 1e6), 4) < 2.0 AS low_entropy
-         FROM d ORDER BY doc_id""",
-    "q_repetition" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+         FROM sc ORDER BY doc_id""")),
+    // Text analysis: per-language corpus rollup
+    Query("q_corpus_stats", (s, d) => TextAnalysis.corpusStats(Tables.documents(s, d)),
+      Sql("""SELECT lang, count(*) AS n_docs,
+         CAST(sum(n_chars) AS BIGINT) AS total_chars,
+         CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
+         min(n_chars) AS min_chars, max(n_chars) AS max_chars
+         FROM documents GROUP BY 1 ORDER BY lang""")),
+    // Text analysis: rolling-hash + md5 document fingerprints
+    Query("q_fingerprints", (s, d) => TextAnalysis.fingerprints(Tables.documents(s, d)),
+      Sql("""SELECT doc_id,
+         list_reduce(
+           list_prepend(CAST(0 AS BIGINT),
+             [CAST(ascii(c) AS BIGINT) for c in string_split(text, '')]),
+           (acc, x) -> (acc*31 + x) % 1000000007) AS rolling_hash,
+         md5(text) AS content_md5
+         FROM documents ORDER BY doc_id""")),
+    // Quality: Gopher-style repetition filters (dup-word/n-gram
+    // fractions + top-bigram share; narrow per-doc array math)
+    Query("q_repetition", (s, d) =>
+      TextAnalysis.repetitionStats(Tables.documents(s, d)),
+      Sql("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          g AS (SELECT doc_id, ws,
            CASE WHEN len(ws) >= 2
                 THEN [ws[i] || ' ' || ws[i+1] for i in range(1, len(ws))]
@@ -560,11 +148,88 @@ private[graft] trait TextEntries extends EntryInfra {
            dup_trigram_frac, top_bigram_frac,
            (n_words >= 20 AND
             (top_bigram_frac >= 0.08 OR dup_trigram_frac >= 0.05)) AS repetitive
-         FROM m ORDER BY doc_id""",
-    // inverse direction: per-bench-doc leak rollup over the same
-    // distinct-shingle machinery
-    "q_contamination_by_bench" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+         FROM m ORDER BY doc_id""")),
+    // Quality: per-doc token-distribution Shannon entropy (nats) —
+    // the templated-garbage detector; zero-shuffle narrow fold in
+    // exact integer micro-nats (plan + exactness spec'd)
+    Query("q_token_entropy", (s, d) =>
+      TextAnalysis.tokenEntropy(Tables.documents(s, d)),
+      // repetition metrics replay in DuckDB via list comprehensions:
+      // range(1, len) yields bigram start indices, list_distinct gives
+      // the dup fractions, and the top-bigram count is the max of each
+      // bigram's own multiplicity (O(n²) is fine at oracle scale; the
+      // Spark side uses an O(n log n) sort + run-length fold — only the
+      // COUNT must agree, not the algorithm)
+      // relational replay of the narrow fold: group-count the tokens,
+      // rebuild Σ c·round(ln(n/c)·1e6) — exact integer terms make the
+      // summation order irrelevant, so shapes can differ across engines
+      Sql("""WITH wc AS (
+           SELECT doc_id, w, count(*) AS c FROM (
+             SELECT doc_id, unnest(string_split(text, ' ')) AS w
+             FROM documents)
+           GROUP BY doc_id, w),
+         d AS (
+           SELECT doc_id, CAST(sum(c) AS BIGINT) AS n,
+                  CAST(count(*) AS BIGINT) AS n_types, list(c) AS cs
+           FROM wc GROUP BY doc_id)
+         SELECT doc_id, n AS n_words, n_types,
+           round(CAST(list_sum(list_transform(cs,
+               c -> c * CAST(round(ln(n / c) * 1e6) AS BIGINT)))
+             AS BIGINT) / (n * 1e6), 4) AS entropy,
+           n >= 20 AND round(CAST(list_sum(list_transform(cs,
+               c -> c * CAST(round(ln(n / c) * 1e6) AS BIGINT)))
+             AS BIGINT) / (n * 1e6), 4) < 2.0 AS low_entropy
+         FROM d ORDER BY doc_id""")),
+    // Quality: zlib compressibility (deflated/raw bytes) — catches
+    // long-range template repeats entropy and n-gram stats miss.
+    // Engine-specific codec → rows-only (exactness spec'd against
+    // java.util.zip; the documented sketch-family pattern)
+    Query("q_compression_ratio", (s, d) =>
+      TextAnalysis.compressionRatio(Tables.documents(s, d)),
+      NoOracle("zlib DEFLATE output is heuristic-dependent; spec-checked against java.util.zip")),
+    // Decontamination: benchmark bigram overlap (benchmark = the
+    // doc_id % 101 == 7 slice, broadcast; corpus = the rest)
+    Query("q_decontaminate", (s, d) => {
+      val docs = Tables.documents(s, d)
+      TextAnalysis.contaminationStats(
+        docs.filter(col("doc_id") % 101 =!= 7),
+        docs.filter(col("doc_id") % 101 === 7),
+        "doc_id", "text")
+    },
+      Sql("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+         g AS (SELECT doc_id,
+           CASE WHEN len(ws) >= 2
+                THEN list_distinct([ws[i] || ' ' || ws[i+1] for i in range(1, len(ws))])
+                ELSE CAST([] AS VARCHAR[]) END AS grams
+           FROM d),
+         bench AS (SELECT DISTINCT unnest(grams) AS gr FROM g WHERE doc_id % 101 = 7),
+         corp AS (SELECT doc_id, grams FROM g WHERE doc_id % 101 <> 7),
+         cg AS (SELECT doc_id, unnest(grams) AS gr FROM corp),
+         hits AS (SELECT cg.doc_id, count(*) AS n_grams, count(bench.gr) AS n_hits
+                  FROM cg LEFT JOIN bench ON cg.gr = bench.gr GROUP BY 1)
+         SELECT corp.doc_id,
+           coalesce(n_grams, 0) AS n_grams,
+           coalesce(n_hits, 0) AS n_hits,
+           CASE WHEN coalesce(n_grams, 0) > 0
+                THEN round(n_hits * 1.0 / n_grams, 4) ELSE 0.0 END AS contamination,
+           (CASE WHEN coalesce(n_grams, 0) > 0
+                 THEN round(n_hits * 1.0 / n_grams, 4) ELSE 0.0 END >= 0.4)
+             AS contaminated
+         FROM corp LEFT JOIN hits ON corp.doc_id = hits.doc_id
+         ORDER BY corp.doc_id""")),
+    // The inverse contamination report: per BENCHMARK doc, how many
+    // corpus docs share its bigrams and what fraction of its grams
+    // leaked — the eval owner's "which test items are compromised"
+    Query("q_contamination_by_bench", (s, d) => {
+      val docs = Tables.documents(s, d)
+      TextAnalysis.contaminationByBenchmark(
+        docs.filter(col("doc_id") % 101 =!= 7),
+        docs.filter(col("doc_id") % 101 === 7),
+        "doc_id", "text")
+    },
+      // inverse direction: per-bench-doc leak rollup over the same
+      // distinct-shingle machinery
+      Sql("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          g AS (SELECT doc_id,
            CASE WHEN len(ws) >= 2
                 THEN list_distinct([ws[i] || ' ' || ws[i+1] for i in range(1, len(ws))])
@@ -589,61 +254,186 @@ private[graft] trait TextEntries extends EntryInfra {
                       // (2 * base.n_grams)) / 10000.0
                 ELSE 0.0 END AS leaked_frac
          FROM base LEFT JOIN leaks l ON base.bench_id = l.bench_id
-         ORDER BY base.bench_id""",
-    "q_decontaminate" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         g AS (SELECT doc_id,
-           CASE WHEN len(ws) >= 2
-                THEN list_distinct([ws[i] || ' ' || ws[i+1] for i in range(1, len(ws))])
-                ELSE CAST([] AS VARCHAR[]) END AS grams
-           FROM d),
-         bench AS (SELECT DISTINCT unnest(grams) AS gr FROM g WHERE doc_id % 101 = 7),
-         corp AS (SELECT doc_id, grams FROM g WHERE doc_id % 101 <> 7),
-         cg AS (SELECT doc_id, unnest(grams) AS gr FROM corp),
-         hits AS (SELECT cg.doc_id, count(*) AS n_grams, count(bench.gr) AS n_hits
-                  FROM cg LEFT JOIN bench ON cg.gr = bench.gr GROUP BY 1)
-         SELECT corp.doc_id,
-           coalesce(n_grams, 0) AS n_grams,
-           coalesce(n_hits, 0) AS n_hits,
-           CASE WHEN coalesce(n_grams, 0) > 0
-                THEN round(n_hits * 1.0 / n_grams, 4) ELSE 0.0 END AS contamination,
-           (CASE WHEN coalesce(n_grams, 0) > 0
-                 THEN round(n_hits * 1.0 / n_grams, 4) ELSE 0.0 END >= 0.4)
-             AS contaminated
-         FROM corp LEFT JOIN hits ON corp.doc_id = hits.doc_id
-         ORDER BY corp.doc_id""",
-    "q_bpe_merges" -> bpeOracle(8),
-    "q_bpe_encode" -> bpeEncodeOracle(8),
-    "q_top_ngrams" ->
-      """WITH t AS (SELECT string_split(text, ' ') AS ws FROM documents),
+         ORDER BY base.bench_id""")),
+    // Span-level decontamination: every 8-word span shared with the
+    // held-out slice is cut out of the corpus doc, rest kept
+    Query("q_decontaminate_spans", (s, d) => {
+      val docs = Tables.documents(s, d)
+      Dedup.spanDecontaminate(
+        docs.filter(col("doc_id") % 101 =!= 7),
+        docs.filter(col("doc_id") % 101 === 7),
+        "doc_id", "text")
+        .orderBy(col("doc_id"))
+    },
+      // span decontamination: corpus spans ∩ benchmark spans (held-out
+      // %101 slice) cut; every matching occurrence drops, rest kept
+      Sql("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
+           FROM documents WHERE doc_id % 101 <> 7),
+         b AS (SELECT string_split(text, ' ') AS ws
+           FROM documents WHERE doc_id % 101 = 7),
+         bh AS (SELECT DISTINCT
+             md5(array_to_string(ws[pos+1 : pos+8], ' ')) AS hh
+           FROM (SELECT ws, unnest(range(0, greatest(len(ws) - 7, 0))) AS pos
+                 FROM b)),
+         occ AS (SELECT doc_id,
+             unnest(range(0, greatest(len(ws) - 7, 0))) AS pos, ws
+           FROM t),
+         h AS (SELECT doc_id, pos,
+             md5(array_to_string(ws[pos+1 : pos+8], ' ')) AS hh
+           FROM occ),
+         removed AS (SELECT doc_id, pos FROM h
+           WHERE hh IN (SELECT hh FROM bh)),
+         covered AS (SELECT DISTINCT doc_id, pos + k.k AS p
+           FROM removed, (SELECT unnest(range(0, 8)) AS k) k),
+         wp AS (SELECT doc_id, unnest(ws) AS word,
+             generate_subscripts(ws, 1) - 1 AS p
+           FROM t),
+         kept AS (SELECT wp.doc_id, wp.word, wp.p
+           FROM wp LEFT JOIN covered cv
+             ON wp.doc_id = cv.doc_id AND wp.p = cv.p
+           WHERE cv.p IS NULL),
+         agg AS (SELECT doc_id, count(*) AS n_kept,
+             string_agg(word, ' ' ORDER BY p) AS clean_text
+           FROM kept GROUP BY doc_id)
+         SELECT t.doc_id, CAST(len(t.ws) AS INT) AS n_words,
+           CAST(len(t.ws) - coalesce(agg.n_kept, 0) AS INT) AS n_dropped,
+           coalesce(agg.clean_text, '') AS clean_text
+         FROM t LEFT JOIN agg USING (doc_id) ORDER BY t.doc_id""")),
+    // Tokenizer training: the first 8 BPE merges learned from the
+    // corpus word-frequency table (Sennrich get_stats/merge loop;
+    // one corpus shuffle, then vocabulary-sized rounds)
+    Query("q_bpe_merges", (s, d) =>
+      withAqeOff(s) {
+        graft.textanalysis.TextAnalysis.bpeMerges(Tables.documents(s, d), 8)
+          .orderBy(col("rank"))
+      },
+      Sql(bpeOracle(8))),
+    // Tokenizer serving: learn the merge table, then tokenize the
+    // corpus with it (bounded driver-side merge literal → one narrow
+    // codegen'd replace chain; the half that runs at 100 TB)
+    Query("q_bpe_encode", (s, d) => {
+      val docs = Tables.documents(s, d)
+      val merges = graft.textanalysis.TextAnalysis.bpeMerges(docs, 8)
+        .orderBy(col("rank")).collect()
+        .map(r => (r.getString(1), r.getString(2))).toSeq
+      graft.textanalysis.TextAnalysis.bpeEncode(docs, merges)
+        .orderBy(col("doc_id"))
+    },
+      Sql(bpeEncodeOracle(8))),
+    // Tokenizer serving PAST the 64-merge literal cap: the FULL
+    // learned merge table (this corpus exhausts at ~106 merges —
+    // past the literal-chain bound; real tokenizers ship 32k+)
+    // through the vocab-join design — merges tokenize the word
+    // VOCABULARY once (chunked ≤64-replace codegen units), the
+    // corpus tokenizes by explode + join on word: O(corpus), one
+    // bounded join, no per-merge pass over the data. Vocab table and
+    // merge table are build-once session artifacts (the PQ-codebook
+    // lifecycle).
+    Query("q_bpe_encode_vocab", (s, d) =>
+      graft.textanalysis.TextAnalysis.bpeEncodeWithVocab(
+        Tables.documents(s, d), bpeVocabTable(s, d))
+        .orderBy(col("doc_id")),
+      Generated(() => bpeVocabOracle)),
+    // The same tokenization served from the WRITTEN artifact (the
+    // writeIvfIndex lifecycle): the vocab-token table reads back
+    // from parquet and the corpus joins it — cross-session serving,
+    // gated by the same direct-replay oracle
+    Query("q_bpe_encode_indexed", (s, d) =>
+      graft.textanalysis.TextAnalysis.bpeEncodeFromVocabIndex(
+        Tables.documents(s, d), builtVocabTokens(s, d))
+        .orderBy(col("doc_id")),
+      // the written-artifact serving path must agree with the
+      // session-artifact path — one replay, two execution paths
+      SameAs("q_bpe_encode_vocab")),
+    // Tokenizer fitness on held-out text: the vocab table built from
+    // the ¾ split serves the ¼ — per-language OOV rate + fertility
+    // (the report a tokenizer owner reads before shipping; exact
+    // //-division readouts, generated merge-replay oracle)
+    Query("q_bpe_coverage", (s, d) => {
+      lastOracleDir = d
+      val docs = Tables.documents(s, d)
+      TextAnalysis.bpeCoverage(docs.filter(col("doc_id") % 4 === 0),
+        bpeTrainVocabTable(s, d))
+    },
+      Generated(() => bpeCoverageOracle)),
+    // Serving the trained vocab against FRESH text with the real-
+    // tokenizer OOV contract: held-out words absent from the
+    // train-split vocabulary fall back to their character stream +
+    // end-of-word marker (the zero-merges base encoding) instead of
+    // dropping — a shipped tokenizer never loses input
+    Query("q_bpe_encode_fallback", (s, d) => {
+      lastOracleDir = d
+      graft.textanalysis.TextAnalysis.bpeEncodeWithVocabFallback(
+        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
+        bpeTrainVocabTable(s, d))
+        .orderBy(col("doc_id"))
+    },
+      bpeFallbackOracle(_.encode)),
+    // The training-data last mile end-to-end: tokenize the held-out
+    // quarter with the TRAINED byte-fallback tokenizer, then pack the
+    // real token counts into 512-token blocks (the q_pack_sequences
+    // strategy over actual tokenizer output, not whitespace proxies)
+    Query("q_pack_bpe", (s, d) => {
+      lastOracleDir = d
+      val enc = graft.textanalysis.TextAnalysis.bpeEncodeWithVocabFallback(
+        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
+        bpeTrainVocabTable(s, d))
+        .select(col("doc_id"), col("n_tokens").as("bpe_tokens"))
+      graft.textanalysis.TextAnalysis.packSequences(
+        enc, "doc_id", col("bpe_tokens"), budget = 512, nShards = 8)
+        .groupBy(col("shard"), col("block"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
+        .orderBy(col("shard"), col("block"))
+    },
+      bpeFallbackOracle(_.pack)),
+    // Vocabulary heavy hitters: exact corpus top-20 bigrams
+    Query("q_top_ngrams", (s, d) =>
+      TextAnalysis.topNgrams(Tables.documents(s, d), 2, 20),
+      Sql("""WITH t AS (SELECT string_split(text, ' ') AS ws FROM documents),
          g AS (SELECT unnest(
              CASE WHEN len(ws) >= 2
                   THEN [ws[i] || ' ' || ws[i+1] for i in range(1, len(ws))]
                   ELSE CAST([] AS VARCHAR[]) END) AS gram FROM t)
          SELECT gram, count(*) AS occurrences FROM g
-         GROUP BY 1 ORDER BY occurrences DESC, gram LIMIT 20""",
-    // cross-doc duplicated 5-gram replay: per-(doc, gram) counts,
-    // per-gram distinct-doc counts, dup occurrences where the gram
-    // lives in >= 2 docs; list-slice comprehension builds the grams
-    "q_memorization" ->
-      (s"""WITH $memorizationCtes
+         GROUP BY 1 ORDER BY occurrences DESC, gram LIMIT 20""")),
+    // Memorization risk (Lee et al. '22): per-doc fraction of 5-gram
+    // occurrences that also appear in at least one OTHER document —
+    // cross-doc duplicated text the model will see repeatedly
+    Query("q_memorization", (s, d) =>
+      TextAnalysis.memorizationStats(Tables.documents(s, d), 5),
+      // cross-doc duplicated 5-gram replay: per-(doc, gram) counts,
+      // per-gram distinct-doc counts, dup occurrences where the gram
+      // lives in >= 2 docs; list-slice comprehension builds the grams
+      Sql(s"""WITH $memorizationCtes
          SELECT d.doc_id, coalesce(per.n_grams, 0) AS n_grams,
            coalesce(per.dup_grams, 0) AS dup_grams,
            CASE WHEN coalesce(per.n_grams, 0) > 0 THEN
              ((per.dup_grams * 20000 + per.n_grams)
               // (2 * per.n_grams)) / 10000.0 END AS dup_frac
          FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-         ORDER BY d.doc_id"""),
-    "q_memorized_grams" ->
-      (s"""WITH $memorizationCtes
+         ORDER BY d.doc_id""")),
+    // ...and the top-20 most duplicated 5-grams behind that fraction
+    Query("q_memorized_grams", (s, d) =>
+      TextAnalysis.memorizedTopGrams(Tables.documents(s, d), 5, 20),
+      Sql(s"""WITH $memorizationCtes
          SELECT dg.g AS gram, count(*) AS n_docs,
            CAST(sum(dg.c) AS BIGINT) AS n_occurrences
          FROM dg GROUP BY 1 HAVING count(*) >= 2
-         ORDER BY n_occurrences DESC, n_docs DESC, gram LIMIT 20"""),
-    // admission-gate replay: train-quarter gram SET membership (the
-    // nd >= 1 probe) against held-out per-(doc, gram) counts
-    "q_memorization_probe" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
+         ORDER BY n_occurrences DESC, n_docs DESC, gram LIMIT 20""")),
+    // Ingest-time admission gate: how much of each held-out doc is
+    // text the train-quarter index has already seen (frozen gram
+    // index probed per batch — never rebuilt)
+    Query("q_memorization_probe", (s, d) => {
+      val docs = Tables.documents(s, d)
+      TextAnalysis.memorizationProbe(
+        docs.filter(col("doc_id") % 4 === 0),
+        TextAnalysis.memorizationIndex(
+          docs.filter(col("doc_id") % 4 =!= 0), 5),
+        5, minDocs = 1L)
+    },
+      // admission-gate replay: train-quarter gram SET membership (the
+      // nd >= 1 probe) against held-out per-(doc, gram) counts
+      Sql("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
                     FROM documents),
          g AS (SELECT doc_id, unnest(
              CASE WHEN len(ws) >= 5
@@ -664,12 +454,75 @@ private[graft] trait TextEntries extends EntryInfra {
               // (2 * per.n_grams)) / 10000.0 END AS dup_frac
          FROM (SELECT doc_id FROM documents WHERE doc_id % 4 = 0) d
          LEFT JOIN per ON d.doc_id = per.doc_id
-         ORDER BY d.doc_id""",
-    // erasure replay: the admission gate against the train set MINUS
-    // the erased batch — the negative-count merge must serve exactly
-    // the retrained gram membership
-    "q_memorization_probe_deleted" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
+         ORDER BY d.doc_id""")),
+    // Mergeable-index refresh: (train index) ⊎ (held-out batch index)
+    // probed at the cross-doc threshold ≡ full-corpus retrain — the
+    // additivity is gated by the full q_memorization replay itself
+    Query("q_memorization_incremental", (s, d) => {
+      val docs = Tables.documents(s, d)
+      val merged = TextAnalysis.mergeMemorizationIndexes(
+        TextAnalysis.memorizationIndex(
+          docs.filter(col("doc_id") % 4 =!= 0), 5),
+        TextAnalysis.memorizationIndex(
+          docs.filter(col("doc_id") % 4 === 0), 5))
+      TextAnalysis.memorizationProbe(
+        docs.filter(col("doc_id") % 4 === 0), merged, 5, minDocs = 2L)
+    },
+      // merged-index probe must equal the FULL-corpus cross-doc replay
+      // restricted to the held-out quarter — additivity is the gate
+      Sql(s"""WITH $memorizationCtes
+         SELECT d.doc_id, coalesce(per.n_grams, 0) AS n_grams,
+           coalesce(per.dup_grams, 0) AS dup_grams,
+           CASE WHEN coalesce(per.n_grams, 0) > 0 THEN
+             ((per.dup_grams * 20000 + per.n_grams)
+              // (2 * per.n_grams)) / 10000.0 END AS dup_frac
+         FROM (SELECT doc_id FROM documents WHERE doc_id % 4 = 0) d
+         LEFT JOIN per ON d.doc_id = per.doc_id
+         ORDER BY d.doc_id""")),
+    // The STAGED serving twins (round-10 verdict #5): per-(doc, gram)
+    // counts staged once as a g-bucketed catalog table, the frozen
+    // gram index bucketed to match — the probe's corpus-wide gram
+    // join plans ZERO exchanges and the query never re-tokenizes.
+    // Each twin shares its one-shot query's oracle SQL verbatim, so
+    // staged ≡ one-shot is gated by the hash itself
+    Query("q_memorization_indexed", (s, d) =>
+      TextAnalysis.memorizationProbeStaged(
+        Tables.documents(s, d).select(col("doc_id")),
+        builtMemGramsTable(s, d), builtMemIndexTable(s, d), minDocs = 2L),
+      // staged (g-bucketed doc-grams + bucketed frozen index) ≡ one-shot
+      SameAs("q_memorization")),
+    Query("q_memorization_probe_indexed", (s, d) =>
+      TextAnalysis.memorizationProbeStaged(
+        Tables.documents(s, d).filter(col("doc_id") % 4 === 0)
+          .select(col("doc_id")),
+        builtMemGramsTable(s, d), builtMemTrainIndexTable(s, d),
+        minDocs = 1L, docFilter = Some(col("doc_id") % 4 === 0)),
+      // staged ≡ one-shot
+      SameAs("q_memorization_probe")),
+    Query("q_memorization_incremental_indexed", (s, d) =>
+      TextAnalysis.memorizationProbeStaged(
+        Tables.documents(s, d).filter(col("doc_id") % 4 === 0)
+          .select(col("doc_id")),
+        builtMemGramsTable(s, d), builtMemIndexTable(s, d),
+        minDocs = 2L, docFilter = Some(col("doc_id") % 4 === 0)),
+      // staged ≡ one-shot
+      SameAs("q_memorization_incremental")),
+    // ERASURE for the mergeable gram index: the train docs ≡ 1 mod 8
+    // erased by appending their own NEGATED counts (O(batch); the
+    // written rows never read), served through the consolidating
+    // reader — the oracle replays the admission gate against the
+    // REMAINING train set, so merged-after-delete ≡ retrain is the
+    // hash gate itself
+    Query("q_memorization_probe_deleted", (s, d) =>
+      TextAnalysis.memorizationProbe(
+        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
+        TextAnalysis.readMemorizationIndexMerged(s,
+          builtMemDelIndexDir(s, d)),
+        5, minDocs = 1L),
+      // erasure replay: the admission gate against the train set MINUS
+      // the erased batch — the negative-count merge must serve exactly
+      // the retrained gram membership
+      Sql("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
                     FROM documents),
          g AS (SELECT doc_id, unnest(
              CASE WHEN len(ws) >= 5
@@ -691,12 +544,61 @@ private[graft] trait TextEntries extends EntryInfra {
               // (2 * per.n_grams)) / 10000.0 END AS dup_frac
          FROM (SELECT doc_id FROM documents WHERE doc_id % 4 = 0) d
          LEFT JOIN per ON d.doc_id = per.doc_id
-         ORDER BY d.doc_id""",
-    // retention as-of("build"): the folded base AFTER
-    // compactMemorizationIndexKeeping — base ∪ folded-w1 (≡5) minus
-    // the folded erasure (≡1), with only the KEPT ≡7 window absent
-    "q_memorization_probe_retained_asof" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
+         ORDER BY d.doc_id""")),
+    // STREAMING ERASURE for the gram index: the same batch forgotten
+    // through two checkpointed deletion-request micro-batches
+    // (memorizationDeleteSink — negated mergeable counts, O(batch));
+    // the consolidated probe shares the batch-deleted oracle, so
+    // sink-erased ≡ retrain-on-remaining is the hash gate itself
+    Query("q_memorization_probe_stream_deleted", (s, d) =>
+      TextAnalysis.memorizationProbe(
+        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
+        TextAnalysis.readMemorizationIndexMerged(s,
+          builtMemStrDelIndexDir(s, d) + "/idx"),
+        5, minDocs = 1L),
+      // sink-erased ≡ retrain-on-remaining: the streaming delete
+      // sink's negated counts share the batch-deleted replay
+      SameAs("q_memorization_probe_deleted")),
+    // ...and the same probe after COMPACTION makes the erasure
+    // physical (base rows rewritten consolidated, _deletes dropped)
+    // — served through the PLAIN reader, no per-read aggregation;
+    // compacted ≡ tombstoned gated by sharing the deleted oracle
+    Query("q_memorization_probe_compacted", (s, d) =>
+      TextAnalysis.memorizationProbe(
+        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
+        TextAnalysis.readMemorizationIndex(s, builtMemCmpIndexDir(s, d)),
+        5, minDocs = 1L),
+      // compaction must not change a served value
+      SameAs("q_memorization_probe_deleted")),
+    // RETENTION for the gram index: two append windows + an erasure,
+    // then compactMemorizationIndexKeeping folds w1 + the erasure
+    // into the base while w2 stays addressable. Serving is invariant
+    // (shares the batch-deleted oracle — the merged membership is
+    // identical); negative folded sums survive by design, so a
+    // folded delete keeps correcting a kept append
+    Query("q_memorization_probe_retained", (s, d) =>
+      TextAnalysis.memorizationProbe(
+        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
+        TextAnalysis.readMemorizationIndexMerged(s,
+          builtMemRetIndexDir(s, d)),
+        5, minDocs = 1L),
+      // retention leaves the merged membership identical to the
+      // batch-deleted index (w1+w2 appends fold/keep to the full
+      // train set, the same ≡1 mod 8 batch erased)
+      SameAs("q_memorization_probe_deleted")),
+    // ...and the fold itself, hash-gated: as-of("build") AFTER
+    // retention = base ∪ folded-w1 − folded-erasure (train minus the
+    // kept ≡7 window minus the erased ≡1 batch)
+    Query("q_memorization_probe_retained_asof", (s, d) =>
+      TextAnalysis.memorizationProbe(
+        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
+        TextAnalysis.readMemorizationIndexAsOf(s,
+          builtMemRetIndexDir(s, d), Seq("build")),
+        5, minDocs = 1L),
+      // retention as-of("build"): the folded base AFTER
+      // compactMemorizationIndexKeeping — base ∪ folded-w1 (≡5) minus
+      // the folded erasure (≡1), with only the KEPT ≡7 window absent
+      Sql("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
                     FROM documents),
          g AS (SELECT doc_id, unnest(
              CASE WHEN len(ws) >= 5
@@ -719,13 +621,49 @@ private[graft] trait TextEntries extends EntryInfra {
               // (2 * per.n_grams)) / 10000.0 END AS dup_frac
          FROM (SELECT doc_id FROM documents WHERE doc_id % 4 = 0) d
          LEFT JOIN per ON d.doc_id = per.doc_id
-         ORDER BY d.doc_id""",
-    // snapshot replay: the admission gate against the BASE batch's
-    // train docs only (train minus its ≡5 mod 8 eighth) — the as-of
-    // read of the appended index must behave as if the append never
-    // happened
-    "q_memorization_probe_asof" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
+         ORDER BY d.doc_id""")),
+    // WRITTEN-APPEND ingestion for the gram index: base (train minus
+    // the ≡5 mod 8 eighth) + that eighth appended under its own
+    // batch partition — O(batch tokenize), base never read; the
+    // consolidated serve shares the FULL-train probe oracle, so
+    // append ≡ retrain-on-union is the hash gate itself
+    Query("q_memorization_probe_appended", (s, d) =>
+      TextAnalysis.memorizationProbe(
+        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
+        TextAnalysis.readMemorizationIndexMerged(s,
+          builtMemAppIndexDir(s, d)),
+        5, minDocs = 1L),
+      // written-append ≡ retrain-on-union
+      SameAs("q_memorization_probe")),
+    // STREAMING ingestion for the gram index (round-11 verdict #5):
+    // the same eighth arrives as two checkpointed micro-batches
+    // through memorizationIndexSink — mergeable counts make the sink
+    // append-only partitions, and the consolidated probe shares the
+    // FULL-train oracle, so stream-built ≡ retrain is the hash gate
+    Query("q_memorization_probe_streamed", (s, d) =>
+      TextAnalysis.memorizationProbe(
+        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
+        TextAnalysis.readMemorizationIndexMerged(s,
+          builtMemStrIndexDir(s, d) + "/idx"),
+        5, minDocs = 1L),
+      // stream-built ≡ retrain-on-union, same additivity argument
+      // through the checkpointed sink
+      SameAs("q_memorization_probe")),
+    // SNAPSHOT of the same appended index as of its BASE batch only
+    // (partition-pruned consolidation) — the probe must behave as if
+    // the append never happened; the oracle replays the gate against
+    // the base split alone
+    Query("q_memorization_probe_asof", (s, d) =>
+      TextAnalysis.memorizationProbe(
+        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
+        TextAnalysis.readMemorizationIndexAsOf(s,
+          builtMemAppIndexDir(s, d), Seq("build")),
+        5, minDocs = 1L),
+      // snapshot replay: the admission gate against the BASE batch's
+      // train docs only (train minus its ≡5 mod 8 eighth) — the as-of
+      // read of the appended index must behave as if the append never
+      // happened
+      Sql("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
                     FROM documents),
          g AS (SELECT doc_id, unnest(
              CASE WHEN len(ws) >= 5
@@ -747,24 +685,14 @@ private[graft] trait TextEntries extends EntryInfra {
               // (2 * per.n_grams)) / 10000.0 END AS dup_frac
          FROM (SELECT doc_id FROM documents WHERE doc_id % 4 = 0) d
          LEFT JOIN per ON d.doc_id = per.doc_id
-         ORDER BY d.doc_id""",
-    // merged-index probe must equal the FULL-corpus cross-doc replay
-    // restricted to the held-out quarter — additivity is the gate
-    "q_memorization_incremental" ->
-      (s"""WITH $memorizationCtes
-         SELECT d.doc_id, coalesce(per.n_grams, 0) AS n_grams,
-           coalesce(per.dup_grams, 0) AS dup_grams,
-           CASE WHEN coalesce(per.n_grams, 0) > 0 THEN
-             ((per.dup_grams * 20000 + per.n_grams)
-              // (2 * per.n_grams)) / 10000.0 END AS dup_frac
-         FROM (SELECT doc_id FROM documents WHERE doc_id % 4 = 0) d
-         LEFT JOIN per ON d.doc_id = per.doc_id
-         ORDER BY d.doc_id"""),
-    // per-term values round to integer pico-nats so the per-source
-    // sum is exact — the same order-independence contract as the LM
-    // micro-nat mean (a float sum over the vocab grid would diverge)
-    "q_domain_divergence" ->
-      """WITH w AS (SELECT source, unnest(string_split(text, ' ')) AS w
+         ORDER BY d.doc_id""")),
+    // Mixture analytics: per-source unigram KL from the corpus blend
+    Query("q_domain_divergence", (s, d) =>
+      TextAnalysis.domainDivergence(Tables.documents(s, d)),
+      // per-term values round to integer pico-nats so the per-source
+      // sum is exact — the same order-independence contract as the LM
+      // micro-nat mean (a float sum over the vocab grid would diverge)
+      Sql("""WITH w AS (SELECT source, unnest(string_split(text, ' ')) AS w
                     FROM documents),
          csw AS (SELECT source, w, count(*) AS c_sw FROM w GROUP BY 1, 2),
          cw AS (SELECT w, sum(c_sw) AS c_w FROM csw GROUP BY 1),
@@ -782,9 +710,11 @@ private[graft] trait TextEntries extends EntryInfra {
            FROM grid)
          SELECT source, CAST(max(n_s) AS BIGINT) AS n_tokens,
            round(sum(t12) / 1e12, 6) AS kl_divergence
-         FROM terms GROUP BY 1 ORDER BY source""",
-    "q_tfidf_keywords" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
+         FROM terms GROUP BY 1 ORDER BY source""")),
+    // Per-doc top-3 tf·idf keywords (BM25's ln-rounding contract)
+    Query("q_tfidf_keywords", (s, d) =>
+      TextAnalysis.tfidfKeywords(Tables.documents(s, d), 3),
+      Sql("""WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
                     FROM documents),
          tfc AS (SELECT doc_id, term, count(*) AS tf FROM w GROUP BY 1, 2),
          dfc AS (SELECT term, count(*) AS df FROM tfc GROUP BY 1),
@@ -797,13 +727,15 @@ private[graft] trait TextEntries extends EntryInfra {
                    ORDER BY score DESC, term) AS rank
                FROM s)
          SELECT doc_id, rank, term, score FROM r
-         WHERE rank <= 3 ORDER BY doc_id, rank""",
-    // the LM replay: model counts from the same corpus, add-1 nll per
-    // bigram rounded to 6 (ln ulp contract), doc mean to 4; docs with
-    // fewer than two words carry a NULL bigram through the left joins
-    // so they aggregate to (0, 0.0)
-    "q_lm_score" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+         WHERE rank <= 3 ORDER BY doc_id, rank""")),
+    // CCNet-style corpus-trained bigram-LM quality score
+    Query("q_lm_score", (s, d) =>
+      TextAnalysis.lmScore(Tables.documents(s, d)),
+      // the LM replay: model counts from the same corpus, add-1 nll per
+      // bigram rounded to 6 (ln ulp contract), doc mean to 4; docs with
+      // fewer than two words carry a NULL bigram through the left joins
+      // so they aggregate to (0, 0.0)
+      Sql("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          b AS (SELECT doc_id, unnest(
              CASE WHEN len(ws) >= 2
                   THEN [ws[i] || ' ' || ws[i+1] for i in range(1, len(ws))]
@@ -828,19 +760,32 @@ private[graft] trait TextEntries extends EntryInfra {
            (CASE WHEN count(bg) > 0
                  THEN round(sum(nll6) * 1.0 / (count(bg) * 1000000.0), 4)
                  ELSE 0.0 END >= 10.0) AS unusual
-         FROM s GROUP BY 1 ORDER BY doc_id""",
-    // DSIR replay: hashed uni+bigram bucket counts for target (en)
-    // and raw (all), add-1 log-ratios rounded to integer micro-nats
-    // (the ln ulp contract), per-doc exact long sums
-    "q_dsir_weights" ->
-      (s"""WITH ${dsirCtes("")},
+         FROM s GROUP BY 1 ORDER BY doc_id""")),
+    // DSIR importance weights: hashed uni+bigram models of the
+    // English slice (target) vs the whole pool (raw); per-doc
+    // log-weight as an exact micro-nat sum (zero-shuffle scoring
+    // pass against the 1024-bucket literal ratio table)
+    Query("q_dsir_weights", (s, d) =>
+      graft.selection.Dsir.dsirScore(Tables.documents(s, d),
+        dsirModelFor(s, d))
+        .orderBy(col("doc_id")),
+      // DSIR replay: hashed uni+bigram bucket counts for target (en)
+      // and raw (all), add-1 log-ratios rounded to integer micro-nats
+      // (the ln ulp contract), per-doc exact long sums
+      Sql(s"""WITH ${dsirCtes("")},
          s AS (SELECT gb.doc_id, count(*) AS n_grams, sum(r.r6) AS s6
                FROM gb JOIN r ON gb.b = r.b GROUP BY 1)
          SELECT doc_id, n_grams,
            ${micro4Sql("s6")} AS dsir_logw
-         FROM s ORDER BY doc_id"""),
-    "q_dsir_select" ->
-      (s"""WITH ${dsirCtes("")},
+         FROM s ORDER BY doc_id""")),
+    // DSIR selection: Gumbel top-50 of the importance weights —
+    // deterministic weighted sampling without replacement (noise
+    // from md5(doc_id), the repo's seedless-sampling convention)
+    Query("q_dsir_select", (s, d) =>
+      graft.selection.Dsir.dsirSelect(Tables.documents(s, d),
+        dsirModelFor(s, d), 50)
+        .orderBy(col("doc_id")),
+      Sql(s"""WITH ${dsirCtes("")},
          s AS (SELECT gb.doc_id, sum(r.r6) AS s6
                FROM gb JOIN r ON gb.b = r.b GROUP BY 1),
          k AS (SELECT doc_id, s6 + ${gumbel6Sql("doc_id")} AS key6
@@ -848,19 +793,63 @@ private[graft] trait TextEntries extends EntryInfra {
          SELECT doc_id,
            ${micro4Sql("key6")} AS dsir_key
          FROM (SELECT * FROM k ORDER BY key6 DESC, doc_id LIMIT 50)
-         ORDER BY doc_id"""),
-    // NB classifier replay: the TRAIN is the oracle — per-class
-    // bucket counts, add-1 ln-ratio weights, prior bias, all in
-    // integer micro-nats (bias rides as the b = -1 row)
-    "q_quality_classifier" ->
-      (s"""WITH $nbCtes
+         ORDER BY doc_id""")),
+    // Incremental model refresh: counts are the MERGEABLE form of
+    // the DSIR model (log-ratios aren't — ln doesn't distribute), so
+    // base-corpus counts + a new batch's counts rebuild the ratio
+    // table EXACTLY as a full retrain would (count additivity) —
+    // which is why the full-corpus oracle gates the merged model
+    Query("q_dsir_incremental", (s, d) => {
+      val docs = Tables.documents(s, d)
+      // base + batch counts from ONE tokenization pass (round-16):
+      // grouped by (bucket, split) the integer counts are exactly the
+      // two dsirCountsOf calls this replaced, and the merge → ratio
+      // path (what the query demonstrates) is unchanged
+      val (base, inc) = graft.selection.Dsir.dsirCountsSplit(docs,
+        col("doc_id") % 3 =!= 0, col("lang") === "en", 1024)
+      graft.selection.Dsir.dsirScore(docs, base.merge(inc).toModel)
+        .orderBy(col("doc_id"))
+    },
+      // merged counts ≡ full retrain by additivity, so the merged
+      // model's scores are gated by the SAME full-corpus replay
+      SameAs("q_dsir_weights")),
+    // Same weights served from the WRITTEN parquet model — the
+    // artifact lifecycle (train → write → read → score) under the
+    // same oracle as the in-session path
+    Query("q_dsir_weights_indexed", (s, d) =>
+      graft.selection.Dsir.dsirScore(Tables.documents(s, d),
+        graft.selection.Dsir.readDsirModel(s, builtDsirModel(s, d)))
+        .orderBy(col("doc_id")),
+      // written-model DSIR must score identically to the in-session
+      // path
+      SameAs("q_dsir_weights")),
+    // Learned quality classifier (fastText-style linear model,
+    // closed-form Naive Bayes train): hashed uni+bigram weights
+    // trained on the ¾ split to separate substantial (n_chars ≥ 300)
+    // docs from short ones — the TRAINING itself replays
+    // relationally: every weight and the prior bias hash-match the
+    // DuckDB count-and-ln replay
+    Query("q_quality_classifier", (s, d) =>
+      graft.quality.NbClassifier.modelFrame(s, nbModelFor(s, d))
+        .orderBy(col("b")),
+      // NB classifier replay: the TRAIN is the oracle — per-class
+      // bucket counts, add-1 ln-ratio weights, prior bias, all in
+      // integer micro-nats (bias rides as the b = -1 row)
+      Sql(s"""WITH $nbCtes
          SELECT b, w6 FROM qw
          UNION ALL SELECT CAST(-1 AS BIGINT) AS b, w6 FROM qbias
-         ORDER BY b"""),
-    // the gate: held-out quarter scored against the replayed weights
-    // — exact long decision sums, MAP keep bit
-    "q_quality_classifier_gate" ->
-      (s"""WITH $nbCtes,
+         ORDER BY b""")),
+    // The learned gate applied to the HELD-OUT quarter (the
+    // lm_score_frozen serving split): exact micro-nat decision scores
+    // + the MAP keep bit, zero-shuffle against the weight literal
+    Query("q_quality_classifier_gate", (s, d) =>
+      graft.quality.NbClassifier.nbScore(
+        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
+        nbModelFor(s, d))
+        .orderBy(col("doc_id")),
+      // the gate: held-out quarter scored against the replayed weights
+      // — exact long decision sums, MAP keep bit
+      Sql(s"""WITH $nbCtes,
          qh AS (SELECT doc_id, string_split(text, ' ') AS ws
                 FROM documents WHERE doc_id % 4 = 0),
          qhg AS (SELECT doc_id, unnest(list_concat(ws,
@@ -876,11 +865,29 @@ private[graft] trait TextEntries extends EntryInfra {
          qhd AS (SELECT qhs.doc_id, qhs.s6 + qbias.w6 AS d6
                  FROM qhs CROSS JOIN qbias)
          SELECT doc_id, ${micro4Sql("d6")} AS nb_score, d6 > 0 AS keep
-         FROM qhd ORDER BY doc_id"""),
-    // the PR sweep re-derives the held-out decisions (same CTEs) and
-    // rolls them per threshold; exact integer //-division readouts
-    "q_classifier_pr" ->
-      (s"""WITH $nbCtes,
+         FROM qhd ORDER BY doc_id""")),
+    // Same gate served from the WRITTEN parquet classifier — the
+    // artifact lifecycle (train → write → read → score) under the
+    // same oracle as the in-session path
+    Query("q_quality_classifier_indexed", (s, d) =>
+      graft.quality.NbClassifier.nbScore(
+        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
+        graft.quality.NbClassifier.readNbModel(s, builtNbModel(s, d)))
+        .orderBy(col("doc_id")),
+      // the written classifier must serve identically to the
+      // in-session one
+      SameAs("q_quality_classifier_gate")),
+    // Calibration readout: precision/recall of the learned gate on
+    // the held-out quarter at ±2-nat thresholds — exact integer
+    // counts, exact long-division 4-decimal ratios
+    Query("q_classifier_pr", (s, d) =>
+      graft.quality.NbClassifier.prCurve(
+        Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
+        nbModelFor(s, d), col("n_chars") >= 300,
+        Seq(-2000000L, -1000000L, 0L, 1000000L, 2000000L)),
+      // the PR sweep re-derives the held-out decisions (same CTEs) and
+      // rolls them per threshold; exact integer //-division readouts
+      Sql(s"""WITH $nbCtes,
          qh AS (SELECT doc_id, string_split(text, ' ') AS ws
                 FROM documents WHERE doc_id % 4 = 0),
          qhg AS (SELECT doc_id, unnest(list_concat(ws,
@@ -914,12 +921,12 @@ private[graft] trait TextEntries extends EntryInfra {
            CASE WHEN tp + fn > 0
                 THEN ((tp * 20000 + (tp + fn)) // (2 * (tp + fn)))
                      / 10000.0 END AS recall
-         FROM c ORDER BY t6"""),
-    // q_dsir_weights_indexed aliases the q_dsir_weights replay in
-    // oracleSql (the q_search_bm25_indexed precedent): the written-
-    // model path must score identically to the in-session one
-    "q_token_fertility" ->
-      """SELECT lang, count(*) AS docs,
+         FROM c ORDER BY t6""")),
+    // Per-language tokenizer fertility: BPE-ish tokens per word over
+    // exact long sums — the token-denominated mixture readout
+    Query("q_token_fertility", (s, d) =>
+      TextAnalysis.tokenFertility(Tables.documents(s, d)),
+      Sql("""SELECT lang, count(*) AS docs,
            CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS words,
            CAST(sum(len(regexp_extract_all(text,
              '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))) AS BIGINT) AS bpeish_tokens,
@@ -929,15 +936,26 @@ private[graft] trait TextEntries extends EntryInfra {
                + sum(len(string_split(text, ' '))))
               // (sum(len(string_split(text, ' '))) * 2)) / 10000.0
            END AS fertility
-         FROM documents GROUP BY lang ORDER BY lang""",
-    // frozen-LM replay: counts from the training slice only; grams and
-    // contexts the model never saw coalesce to 0 (add-1 smooths them)
-    // the FUSED admission: all three trainings replay (NB weights,
-    // DSIR ratios, ¾-trained LM), then the held-out quarter passes
-    // iff it clears ALL thresholds — the streamed sink's output must
-    // hash-match this batch composition exactly
-    "q_admission_pipeline" ->
-      (s"""WITH ${admissionCtes(
+         FROM documents GROUP BY lang ORDER BY lang""")),
+    // FUSED ingest admission: the held-out quarter streamed through
+    // admissionSink — three frozen artifacts (¾-trained bigram LM,
+    // NB classifier, DSIR ratios) gate each micro-batch as ONE
+    // decision over ONE shared tokenization; survivors carry their
+    // scores as the audit trail. The static oracle replays all three
+    // trainings AND the composed decision, so stream ≡ batch-
+    // composition is the hash gate itself
+    Query("q_admission_pipeline", (s, d) =>
+      s.read.parquet(builtAdmissionOut(s, d) + "/out")
+        .select(col("doc_id"), col("lm_nll"), col("nb_d6"),
+          col("dsir_logw"))
+        .orderBy(col("doc_id")),
+      // frozen-LM replay: counts from the training slice only; grams and
+      // contexts the model never saw coalesce to 0 (add-1 smooths them)
+      // the FUSED admission: all three trainings replay (NB weights,
+      // DSIR ratios, ¾-trained LM), then the held-out quarter passes
+      // iff it clears ALL thresholds — the streamed sink's output must
+      // hash-match this batch composition exactly
+      Sql(s"""WITH ${admissionCtes(
           """SELECT doc_id, string_split(text, ' ') AS ws
                 FROM documents WHERE doc_id % 4 = 0""")}
          SELECT l.doc_id, l.lm_nll, CAST(n.d6 AS BIGINT) AS nb_d6,
@@ -947,19 +965,40 @@ private[graft] trait TextEntries extends EntryInfra {
          JOIN dsc ds ON ds.doc_id = l.doc_id
          WHERE l.lm_nll < 10.0 AND n.d6 > 0
            AND ${micro4Sql("ds.s6")} >= 0.0
-         ORDER BY l.doc_id"""),
-    // the COMPLETE admission adds the memorization gate: the stream
-    // is the held-out quarter PLUS planted re-ingests of the ≡1 mod
-    // 8 train docs (+5e6 ids, same text) — docs that pass the three
-    // row-local gates but duplicate the train corpus verbatim, so
-    // the dup gate is their decisive rejector and its bite is
-    // hash-gated. The ¾-train gram membership replays (reusing the
-    // LM CTE's train tokens); per-doc dup_frac derives exactly as
-    // q_memorization_probe's; gram-less docs pass the dup gate (no
-    // duplication evidence). DSIR scores for the planted rows reuse
-    // the base per-doc sums re-keyed (+5e6 — same text, same grams)
-    "q_admission_pipeline_full" ->
-      (s"""WITH ${admissionCtes(
+         ORDER BY l.doc_id""")),
+    // RETENTION on the gate sink's admitted-output table (the third
+    // catalog family under the query gate): micro-batch 0 folded to
+    // the collapse partition, batch 1 kept — the full admitted set is
+    // invariant, gated by sharing q_admission_pipeline's oracle
+    Query("q_admission_retained", (s, d) =>
+      s.read.parquet(builtAdmissionRetainedOut(s, d) + "/out")
+        .select(col("doc_id"), col("lm_nll"), col("nb_d6"),
+          col("dsir_logw"))
+        .orderBy(col("doc_id")),
+      // catalog retention on the gate sink's output leaves the
+      // admitted set invariant
+      SameAs("q_admission_pipeline")),
+    // The COMPLETE admission: the three row-local gates PLUS the
+    // join-shaped memorization gate against the frozen ¾-train gram
+    // index, one decision per micro-batch over one materialized
+    // tokenize pass. The static oracle replays all FOUR artifact
+    // derivations and the composed decision
+    Query("q_admission_pipeline_full", (s, d) =>
+      s.read.parquet(builtFullAdmissionOut(s, d) + "/out")
+        .select(col("doc_id"), col("lm_nll"), col("nb_d6"),
+          col("dsir_logw"), col("dup_frac"))
+        .orderBy(col("doc_id")),
+      // the COMPLETE admission adds the memorization gate: the stream
+      // is the held-out quarter PLUS planted re-ingests of the ≡1 mod
+      // 8 train docs (+5e6 ids, same text) — docs that pass the three
+      // row-local gates but duplicate the train corpus verbatim, so
+      // the dup gate is their decisive rejector and its bite is
+      // hash-gated. The ¾-train gram membership replays (reusing the
+      // LM CTE's train tokens); per-doc dup_frac derives exactly as
+      // q_memorization_probe's; gram-less docs pass the dup gate (no
+      // duplication evidence). DSIR scores for the planted rows reuse
+      // the base per-doc sums re-keyed (+5e6 — same text, same grams)
+      Sql(s"""WITH ${admissionCtes(
           """SELECT doc_id, string_split(text, ' ') AS ws
                 FROM documents WHERE doc_id % 4 = 0
                 UNION ALL
@@ -1003,9 +1042,16 @@ private[graft] trait TextEntries extends EntryInfra {
          WHERE l.lm_nll < 10.0 AND n.d6 > 0
            AND ${micro4Sql("ds.s6")} >= 0.0
            AND (m.dup_frac IS NULL OR m.dup_frac <= 0.5)
-         ORDER BY l.doc_id"""),
-    "q_lm_score_frozen" ->
-      """WITH tr AS (SELECT string_split(text, ' ') AS ws FROM documents
+         ORDER BY l.doc_id""")),
+    // Frozen-LM serving split: model trained on the ¾ corpus slice,
+    // scores the held-out ¼ — unseen grams smooth through add-1
+    Query("q_lm_score_frozen", (s, d) => {
+      val docs = Tables.documents(s, d)
+      TextAnalysis.lmScoreWith(
+        TextAnalysis.lmTrain(docs.filter(col("doc_id") % 4 =!= 0)),
+        docs.filter(col("doc_id") % 4 === 0), nllThreshold = 10.0)
+    },
+      Sql("""WITH tr AS (SELECT string_split(text, ' ') AS ws FROM documents
                      WHERE doc_id % 4 <> 0),
          b0 AS (SELECT unnest(
              CASE WHEN len(ws) >= 2
@@ -1038,65 +1084,23 @@ private[graft] trait TextEntries extends EntryInfra {
            (CASE WHEN count(bg) > 0
                  THEN round(sum(nll6) * 1.0 / (count(bg) * 1000000.0), 4)
                  ELSE 0.0 END >= 10.0) AS unusual
-         FROM s GROUP BY 1 ORDER BY doc_id""",
-    "q_normalize_text" ->
-      """SELECT doc_id,
+         FROM s GROUP BY 1 ORDER BY doc_id""")),
+    // Canonical normalization over planted case/punct/whitespace noise
+    Query("q_normalize_text", (s, d) =>
+      Tables.documents(s, d)
+        .withColumn("messy",
+          when(col("doc_id") % 2 === 0, concat(upper(col("text")), lit("!! ")))
+            .otherwise(concat(lit("  "), col("text"), lit(" ,. "))))
+        .select(col("doc_id"),
+          TextFunctions.normalizeText(col("messy")).as("normalized"))
+        .orderBy(col("doc_id")),
+      Sql("""SELECT doc_id,
          trim(regexp_replace(regexp_replace(
            lower(CASE WHEN doc_id % 2 = 0 THEN upper(text) || '!! '
                       ELSE '  ' || text || ' ,. ' END),
            '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS normalized
-         FROM documents ORDER BY doc_id""",
-    // span decontamination: corpus spans ∩ benchmark spans (held-out
-    // %101 slice) cut; every matching occurrence drops, rest kept
-    "q_decontaminate_spans" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
-           FROM documents WHERE doc_id % 101 <> 7),
-         b AS (SELECT string_split(text, ' ') AS ws
-           FROM documents WHERE doc_id % 101 = 7),
-         bh AS (SELECT DISTINCT
-             md5(array_to_string(ws[pos+1 : pos+8], ' ')) AS hh
-           FROM (SELECT ws, unnest(range(0, greatest(len(ws) - 7, 0))) AS pos
-                 FROM b)),
-         occ AS (SELECT doc_id,
-             unnest(range(0, greatest(len(ws) - 7, 0))) AS pos, ws
-           FROM t),
-         h AS (SELECT doc_id, pos,
-             md5(array_to_string(ws[pos+1 : pos+8], ' ')) AS hh
-           FROM occ),
-         removed AS (SELECT doc_id, pos FROM h
-           WHERE hh IN (SELECT hh FROM bh)),
-         covered AS (SELECT DISTINCT doc_id, pos + k.k AS p
-           FROM removed, (SELECT unnest(range(0, 8)) AS k) k),
-         wp AS (SELECT doc_id, unnest(ws) AS word,
-             generate_subscripts(ws, 1) - 1 AS p
-           FROM t),
-         kept AS (SELECT wp.doc_id, wp.word, wp.p
-           FROM wp LEFT JOIN covered cv
-             ON wp.doc_id = cv.doc_id AND wp.p = cv.p
-           WHERE cv.p IS NULL),
-         agg AS (SELECT doc_id, count(*) AS n_kept,
-             string_agg(word, ' ' ORDER BY p) AS clean_text
-           FROM kept GROUP BY doc_id)
-         SELECT t.doc_id, CAST(len(t.ws) AS INT) AS n_words,
-           CAST(len(t.ws) - coalesce(agg.n_kept, 0) AS INT) AS n_dropped,
-           coalesce(agg.clean_text, '') AS clean_text
-         FROM t LEFT JOIN agg USING (doc_id) ORDER BY t.doc_id""",
-    "q_corpus_stats" ->
-      """SELECT lang, count(*) AS n_docs,
-         CAST(sum(n_chars) AS BIGINT) AS total_chars,
-         CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
-         min(n_chars) AS min_chars, max(n_chars) AS max_chars
-         FROM documents GROUP BY 1 ORDER BY lang""",
-    "q_fingerprints" ->
-      """SELECT doc_id,
-         list_reduce(
-           list_prepend(CAST(0 AS BIGINT),
-             [CAST(ascii(c) AS BIGINT) for c in string_split(text, '')]),
-           (acc, x) -> (acc*31 + x) % 1000000007) AS rolling_hash,
-         md5(text) AS content_md5
-         FROM documents ORDER BY doc_id""",
+         FROM documents ORDER BY doc_id""")),
   )
-
   /** Build-once DSIR ratio table per (session, sfDir) — the frozen
     * selection model is a serving artifact like the PQ codebook and
     * IVF centroids: train once, score every batch against it.
@@ -1539,12 +1543,11 @@ private[graft] trait TextEntries extends EntryInfra {
     * + join + positional reassembly) equals straight-line greedy
     * merge application of the full table.
     */
-  protected def bpeVocabOracle: Seq[(String, String)] =
+  protected def bpeVocabOracle: Option[String] =
     Option(lastOracleDir).flatMap(d =>
-        Option(bpeMergesFullCache.get(d))).toSeq.flatMap { ms =>
+        Option(bpeMergesFullCache.get(d))).map { ms =>
       val merged = bpeMergedSql(ms, "w")
-      val sql =
-        s"""WITH enc AS (
+      s"""WITH enc AS (
            SELECT doc_id,
              array_to_string(list_transform(
                list_filter(string_split(text, ' '),
@@ -1558,9 +1561,6 @@ private[graft] trait TextEntries extends EntryInfra {
                   ELSE len(string_split(tokens, ' ')) END AS BIGINT) AS n_tokens,
              tokens
            FROM enc ORDER BY doc_id"""
-      // the written-artifact serving path must agree with the
-      // session-artifact path — one replay, two execution paths
-      Seq("q_bpe_encode_vocab" -> sql, "q_bpe_encode_indexed" -> sql)
     }
 
   /** Generated q_bpe_coverage oracle: train-split vocabulary
@@ -1569,13 +1569,12 @@ private[graft] trait TextEntries extends EntryInfra {
     * [[bpeTrainMerges]] — the measured tokenizer must never have
     * seen the held-out quarter); exact //-division ratio readouts.
     */
-  protected def bpeCoverageOracle: Seq[(String, String)] =
+  protected def bpeCoverageOracle: Option[String] =
     Option(lastOracleDir).flatMap(d =>
-        Option(bpeMergesTrainCache.get(d))).toSeq.map { ms =>
+        Option(bpeMergesTrainCache.get(d))).map { ms =>
       val merged = bpeMergedSql(ms, "w")
       val legal = bpeLegalSql
-      "q_bpe_coverage" ->
-        s"""WITH trv AS (
+      s"""WITH trv AS (
            SELECT DISTINCT unnest(list_filter(string_split(text, ' '),
              $legal)) AS w
            FROM documents WHERE doc_id % 4 <> 0),
@@ -1614,13 +1613,16 @@ private[graft] trait TextEntries extends EntryInfra {
     * cumulative window, so the tokenizer under the packer is
     * replayed, not re-derived.
     */
-  protected def bpeFallbackOracle: Seq[(String, String)] =
-    Option(lastOracleDir).flatMap(d =>
-        Option(bpeMergesTrainCache.get(d))).toSeq.flatMap { ms =>
-      val merged = bpeMergedSql(ms, "wd")
-      val legal = bpeLegalSql
-      val chain =
-        s"""WITH trv AS (
+  protected def bpeFallbackOracle(sql: BpeFallbackSql => String): Oracle =
+    Generated(() => Option(lastOracleDir).flatMap(d =>
+        Option(bpeMergesTrainCache.get(d))).map(ms => sql(new BpeFallbackSql(ms))))
+
+  /** The [[bpeFallbackOracle]] replays over one train-split merge table. */
+  protected final class BpeFallbackSql(ms: Seq[(String, String)]) {
+    private val merged = bpeMergedSql(ms, "wd")
+    private val legal = bpeLegalSql
+    private val chain =
+      s"""WITH trv AS (
            SELECT DISTINCT unnest(list_filter(string_split(text, ' '),
              $legal)) AS w
            FROM documents WHERE doc_id % 4 <> 0),
@@ -1641,16 +1643,15 @@ private[graft] trait TextEntries extends EntryInfra {
              CAST(sum(len(string_split(t, ' '))) AS BIGINT) AS n_tokens,
              string_agg(t, ' ' ORDER BY pos) AS tokens
            FROM tok GROUP BY doc_id)"""
-      Seq(
-        "q_bpe_encode_fallback" ->
-          s"""$chain
+    def encode: String =
+      s"""$chain
            SELECT d.doc_id, coalesce(a.n_tokens, 0) AS n_tokens,
              coalesce(a.tokens, '') AS tokens
            FROM (SELECT doc_id FROM documents WHERE doc_id % 4 = 0) d
            LEFT JOIN agg a ON d.doc_id = a.doc_id
-           ORDER BY d.doc_id""",
-        "q_pack_bpe" ->
-          s"""$chain,
+           ORDER BY d.doc_id"""
+    def pack: String =
+      s"""$chain,
            e AS (SELECT d.doc_id, coalesce(a.n_tokens, 0) AS n_tokens
                  FROM (SELECT doc_id FROM documents
                        WHERE doc_id % 4 = 0) d
@@ -1664,8 +1665,8 @@ private[graft] trait TextEntries extends EntryInfra {
            SELECT shard,
              CAST(floor((cum - n_tokens) / 512) AS BIGINT) AS block,
              count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens
-           FROM c GROUP BY 1, 2 ORDER BY shard, block""")
-    }
+           FROM c GROUP BY 1, 2 ORDER BY shard, block"""
+  }
 
   /** Shared CTE replaying the md5-mode MinHash-LSH pipeline in
     * DuckDB: planted corpus → shingles → 16-permutation md5
